@@ -298,39 +298,38 @@ def q_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2+J3: union-dedup of the two exact-key self-joins, id_a < id_b.
-
-    Physical form: ONE tall (rid, namespaced-key) table -> ONE salted
-    self-join -> one dedup (the same collapse candidates.candidate_pairs
-    uses) instead of two independent self-join pipelines — halves the
-    key-size scans, broadcast builds and join shuffles regardless of
-    how many blocking keys exist (guide §2.4); the "p:"/"l:" prefixes
-    keep the key spaces disjoint, so the pair set is IDENTICAL to the
-    per-key union (oracle-pinned)."""
-    d = q_blocking_keys(spark, sf_dir)
-    tall = d.select(
-        F.col("doc_id").alias("rid"),
-        F.explode(
-            F.filter(
-                F.array(
-                    F.concat(F.lit("p:"), F.col("bk_prefix")),
-                    F.concat(F.lit("l:"), F.col("bk_lang_size")),
-                ),
-                lambda x: x.isNotNull(),
-            )
-        ).alias("bk"),
-    # materialize the NARROW (rid, key) table once: the salted
-    # self-join scans it four ways (key-size aggregate, both cold
-    # sides, hot side), each otherwise re-running the blocking-key
-    # normalization lineage (guide §2.4; cheap here because the
-    # checkpoint rows are two scalar columns — contrast the rejected
-    # dedup_prefix checkpoint, whose rows carried full token arrays)
-    ).localCheckpoint(eager=False)
-    return (
-        C.self_join_pairs(tall, "bk", id_col="rid")
-        .dropDuplicates(["id_a", "id_b"])
-        .select(F.col("id_a").cast("long"), F.col("id_b").cast("long"))
+    """J2+J3: union-dedup of the two exact-key self-joins, id_a < id_b,
+    through the engine's one candidate operator
+    (operators/candidates.py:candidate_pairs — one tall key table, one
+    salted self-join, one dedup; oracle-pinned to the per-key union)."""
+    pairs = C.candidate_pairs(
+        q_blocking_keys(spark, sf_dir),
+        exact_keys=["bk_prefix", "bk_lang_size"],
+        band_keys=[],
+        id_col="doc_id",
     )
+    return pairs.select(F.col("id_a").cast("long"), F.col("id_b").cast("long"))
+
+
+def _prefix_score(pa: str, pb: str):
+    """Normalized Levenshtein similarity of two prefix columns, rounded
+    to 6 decimals; 0.0 when either side is empty (NULL stays NULL)."""
+    a, b = F.col(pa), F.col(pb)
+    longest = F.greatest(F.length(a), F.length(b)).cast("double")
+    return F.when((a == "") | (b == ""), F.lit(0.0)).otherwise(
+        F.round(1.0 - F.levenshtein(a, b) / longest, 6)
+    )
+
+
+def _prefix_sides(spark: SparkSession, sf_dir: str):
+    """(id_a, pa) and (id_b, pb) views of the 24-char text prefix."""
+    d = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.substring(F.lower(F.trim("text")), 1, 24).alias("prefix"),
+    )
+    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
+    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
+    return a, b
 
 
 def q_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,37 +351,12 @@ def q_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("lb"), F.col("source").alias("sb"),
     )
     h = pairs.join(a, "id_a").join(b, "id_b")
-    lev_score = F.when(
-        (F.col("pa") == "") | (F.col("pb") == ""), F.lit(0.0)
-    ).otherwise(
-        F.round(
-            1.0
-            - F.levenshtein("pa", "pb")
-            / F.greatest(F.length("pa"), F.length("pb")).cast("double"),
-            6,
-        )
-    )
     return h.select(
         "id_a",
         "id_b",
-        lev_score.alias("prefix_score"),
+        _prefix_score("pa", "pb").alias("prefix_score"),
         F.when((F.col("la") == F.col("lb")), 1).otherwise(0).cast("long").alias("lang_match"),
         F.when((F.col("sa") == F.col("sb")), 1).otherwise(0).cast("long").alias("source_match"),
-    )
-
-
-def q_pair_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2/P4: Jaro-Winkler pandas-UDF kernel vs DuckDB's built-in."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring(F.lower(F.trim("text")), 1, 20).alias("prefix")
-    )
-    pairs = q_candidate_pairs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(_JW("pa", "pb"), 6).alias("jw_score"))
     )
 
 
@@ -459,24 +433,6 @@ def q_soft_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return soft_tfidf_pairs(pairs, d, id_col="doc_id", tokens_col="toks")
 
 
-def q_pair_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1: unrestricted Damerau-Levenshtein normalized score (the
-    reference's nid_score kernel, matching.py:263-270) vs DuckDB's
-    damerau_levenshtein — pins the DL kernel to an oracle, not just
-    unit tests."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring(F.lower(F.trim("text")), 1, 16).alias("prefix")
-    )
-    pairs = q_candidate_pairs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(_DL("pa", "pb"), 6).alias("dl_score"))
-    )
-
-
 def _cascade_feats(feats: DataFrame) -> DataFrame:
     """The deterministic derived-feature projection the cascade
     classifies — shared by q_rule_cascade and the disagreement
@@ -507,6 +463,7 @@ def q_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# g_source is also fs_pr_curve's truth: its pattern-level sweep needs it here
 _FS_FIELDS = ["g_prefix", "g_lang", "g_source", "g_hash"]
 _FS_ITERS = 10
 
@@ -677,6 +634,7 @@ def q_fs_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpersisted one-pass variant measured SLOWER in interleaved A/B —
     the persist costs nothing on a single traversal and keeps the
     helper semantics identical across the F-S family)."""
+    assert "g_source" in _FS_FIELDS  # truth must be pattern-determined
     pat = FS.scored_pattern_counts(
         _fs_flagged(spark, sf_dir), _FS_FIELDS, iters=_FS_ITERS
     )
@@ -835,24 +793,9 @@ def q_cluster_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = q_connected_components(spark, sf_dir).withColumnRenamed(
         "component", "cluster"
     )
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring(F.lower(F.trim("text")), 1, 24).alias("prefix"),
-    )
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    score = F.when(
-        (F.col("pa") == "") | (F.col("pb") == ""), F.lit(0.0)
-    ).otherwise(
-        F.round(
-            1.0
-            - F.levenshtein("pa", "pb")
-            / F.greatest(F.length("pa"), F.length("pb")).cast("double"),
-            6,
-        )
-    )
+    a, b = _prefix_sides(spark, sf_dir)
     edges = a.join(b, F.col("id_b") == F.col("id_a") + 1).select(
-        "id_a", "id_b", score.alias("score")
+        "id_a", "id_b", _prefix_score("pa", "pb").alias("score")
     )
     from aml_entity_resolution_assignment_spark.operators.cluster import (
         cluster_cohesion,
@@ -1039,28 +982,15 @@ def _band_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs (doc_id+1..+3) scored by 24-char-prefix levenshtein
     similarity, via an exploded-offset equi-join (never a range
     join)."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring(F.lower(F.trim("text")), 1, 24).alias("prefix"),
-    )
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    score = F.when(
-        (F.col("pa") == "") | (F.col("pb") == ""), F.lit(0.0)
-    ).otherwise(
-        F.round(
-            1.0
-            - F.levenshtein("pa", "pb")
-            / F.greatest(F.length("pa"), F.length("pb")).cast("double"),
-            6,
-        )
-    )
+    a, b = _prefix_sides(spark, sf_dir)
     cand = a.select(
         "id_a",
         "pa",
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("off"),
     ).select("id_a", "pa", (F.col("id_a") + F.col("off")).alias("id_b"))
-    return cand.join(b, "id_b").select("id_a", "id_b", score.alias("score"))
+    return cand.join(b, "id_b").select(
+        "id_a", "id_b", _prefix_score("pa", "pb").alias("score")
+    )
 
 
 def q_hac_single(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,40 +1664,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs at max_hamming=2 — inside the Manku
-    block-pair recall GUARANTEE (<=2 corrupted bits leave an intact
-    block pair), so the output equals exact all-pairs hamming<=2. The
-    md5-based token hash (functions/minhash.py:_token_hash64) is
-    DuckDB md5_number_lower, so the oracle recomputes the full simhash
-    in SQL."""
-    d = _docs(spark, sf_dir)
-    out = D.simhash_near_dup_pairs(
-        d, "doc_id", "text", max_hamming=2, token_hash="md5"
-    )
-    return out.select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "hamming"
-    )
-
-
-def q_dedup_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION simhash near-dup path: identical plan to
-    q_dedup_simhash but with the vectorized SipHash token hash
-    (token_hash='fast') instead of the md5 oracle twin — the form a
-    10^12-doc deployment runs. SipHash is not expressible in DuckDB,
-    but it IS deterministic: the oracle embeds the corpus's fixed
-    31-token vocabulary with precomputed hash constants as a literal
-    VALUES table and recomputes simhash + hamming in SQL — a full
-    rows+schema+hash check of the production path."""
-    d = _docs(spark, sf_dir)
-    out = D.simhash_near_dup_pairs(
-        d, "doc_id", "text", max_hamming=2, token_hash="fast"
-    )
-    return out.select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "hamming"
-    )
-
-
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for the first 8 vectors (rank output —
     integer-stable across engines)."""
@@ -1837,38 +1733,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("id_a").cast("long"), F.col("id_b").cast("long"),
         F.round("cosine", 6).alias("cosine"),
-    )
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality features + token counts, all JVM-side."""
-    d = _docs(spark, sf_dir)
-    qf = T.quality_features(F.col("text"))
-    return d.select(
-        "doc_id",
-        qf["n_chars"].alias("n_chars_q"),
-        qf["n_tokens"].alias("n_tokens"),
-        F.round(qf["punct_ratio"], 6).alias("punct_ratio"),
-        F.round(qf["digit_ratio"], 6).alias("digit_ratio"),
-        F.round(qf["stopword_ratio"], 6).alias("stopword_ratio"),
-    )
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite 0-1 quality score (functions/text.py:quality_score) —
-    the deterministic linear blend, fully SQL-reproducible."""
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", T.quality_score(F.col("text")).alias("quality"))
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting both ways: whitespace tokens + the BPE-ish
-    word-chunk/punctuation estimator (functions/text.py)."""
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        T.token_count(F.col("text")).alias("ws_tokens"),
-        T.word_token_count(F.col("text")).alias("word_tokens"),
     )
 
 
@@ -1969,460 +1833,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG decode path END-TO-END with a hard oracle: build a REAL
-    baseline JPEG (functions/jpeg.py encoder: DCT, quantization,
-    Huffman entropy coding, byte stuffing) whose four 8x8 blocks are
-    constant grays taken from each document's first 4 ASCII bytes —
-    with the all-ones quant table, constant blocks decode BIT-EXACTLY
-    through the full bitstream (markers -> Huffman -> dequant -> IDCT).
-    The decoded 4x4 thumbnail quadrants therefore equal
-    ord(substr(text, q+1)) — directly expressible in SQL."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        encode_jpeg_gray,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_jpeg(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_jpeg_gray(img))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    jpeg_udf = F.pandas_udf(_to_jpeg, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        jpeg_udf(F.col("text")).alias("payload"),
-        F.lit("image/jpeg").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PROGRESSIVE (SOF2) JPEG decode path END-TO-END with a hard
-    oracle: same flat-quadrant construction as multimodal_jpeg but
-    encoded with the multi-scan progressive encoder (interleaved DC
-    first + refinement, AC spectral bands with EOB runs, successive-
-    approximation refinement). Constant blocks with the all-ones quant
-    table decode BIT-EXACTLY, so the same ord(substr) SQL twin holds —
-    proving the SOF2 scan machinery reconstructs the identical
-    coefficient store."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        encode_jpeg_progressive,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_jpeg(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_jpeg_progressive(img))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    jpeg_udf = F.pandas_udf(_to_jpeg, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        jpeg_udf(F.col("text")).alias("payload"),
-        F.lit("image/jpeg").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PNG decode path END-TO-END with a hard oracle: build a REAL PNG
-    (functions/png.py encoder) whose four 8x8 quadrants are constant
-    grays taken from each document's first 4 ASCII bytes, with the
-    per-row filter CYCLING through all five types (None/Sub/Up/
-    Average/Paeth) so the full unfilter path runs on every payload.
-    PNG is lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly — same SQL twin as multimodal_jpeg."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.png import encode_png
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_png(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_png(img, filter_type="cycle"))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    png_udf = F.pandas_udf(_to_png, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        png_udf(F.col("text")).alias("payload"),
-        F.lit("image/png").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF decode path END-TO-END with a hard oracle: build a REAL
-    INTERLACED GIF89a (functions/gif.py encoder: literal-only LZW with
-    clear re-spam, 4-pass interlace) whose four 8x8 quadrants are the
-    doc's first 4 ASCII bytes through an identity gray palette — LZW
-    is lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly. Same SQL twin as jpeg/png."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.gif import encode_gif
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-
-    def _to_gif(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_gif(img, pal, interlace=True))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    gif_udf = F.pandas_udf(_to_gif, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        gif_udf(F.col("text")).alias("payload"),
-        F.lit("image/gif").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless-WebP decode path END-TO-END with a hard oracle: build
-    a REAL VP8L bitstream (functions/webp.py: canonical prefix codes,
-    color cache, subtract-green + predictor transforms) whose four
-    8x8 quadrants are the doc's first 4 ASCII bytes. VP8L is
-    lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly. Same SQL twin as jpeg/png/gif."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.webp import encode_webp
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_webp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            # all 4 channels (incl. alpha) carry the byte so the
-            # channel-mean gray equals it exactly
-            img = np.zeros((16, 16, 4), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(
-                ((0, 0), (0, 8), (8, 0), (8, 8))
-            ):
-                img[ys : ys + 8, xs : xs + 8, :] = raw[q]
-            out.append(
-                encode_webp(
-                    img, cache_bits=3, subtract_green=True, predictor_mode=1
-                )
-            )
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    webp_udf = F.pandas_udf(_to_webp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        webp_udf(F.col("text")).alias("payload"),
-        F.lit("image/webp").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_webp_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOSSY VP8 decode path END-TO-END with a hard oracle: build a
-    REAL VP8 key-frame bitstream (functions/vp8.py: boolean arithmetic
-    coder, Y2/WHT DC pipeline, intra prediction, iDCT) whose four
-    16x16 macroblocks are flat grays from the doc's first 4 ASCII
-    bytes. Flat MBs quantize EXACTLY at qi=0 (the Y2 DC path divides
-    evenly: fdct DC = 8*res, fwht gain 8, y2_dc factor 8 | 64*res), so
-    the decoded luma equals the source byte per quadrant, and with
-    neutral chroma the RGB conversion is the SQL-expressible integer
-    map clamp((298*(g-16)+128)>>8) — tolerance-free end to end."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.vp8 import (
-        encode_webp_lossy,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_webp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            y = np.zeros((32, 32), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 16), (16, 0), (16, 16))):
-                y[ys : ys + 16, xs : xs + 16] = raw[q]
-            out.append(encode_webp_lossy(y, qi=0, filter_level=0)[0])
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    webp_udf = F.pandas_udf(_to_webp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        webp_udf(F.col("text")).alias("payload"),
-        F.lit("image/webp").alias("mime"),
-        F.lit(32).alias("width"),
-        F.lit(32).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIFF decode path END-TO-END with a hard oracle: big-endian
-    LZW-compressed TIFF with horizontal predictor and 5-row strips,
-    quadrants = the doc's first 4 ASCII bytes (lossless -> same
-    ord(substr) twin as png/webp)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.tiff import encode_tiff
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_tiff(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                img[ys : ys + 8, xs : xs + 8] = raw[q]
-            out.append(
-                encode_tiff(
-                    img, compression=5, predictor=2, rows_per_strip=5,
-                    big_endian=True,
-                )
-            )
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    tiff_udf = F.pandas_udf(_to_tiff, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        tiff_udf(F.col("text")).alias("payload"),
-        F.lit("image/tiff").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BMP decode path END-TO-END: 8-bit palette DIB (bottom-up rows,
-    4-byte padding), quadrants = the doc's first 4 ASCII bytes via an
-    identity gray palette — lossless, same ord(substr) twin."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.bmp import encode_bmp
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-
-    def _to_bmp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                img[ys : ys + 8, xs : xs + 8] = raw[q]
-            out.append(encode_bmp(img, palette=pal))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    bmp_udf = F.pandas_udf(_to_bmp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        bmp_udf(F.col("text")).alias("payload"),
-        F.lit("image/bmp").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video decode path END-TO-END with a hard oracle: build a REAL
-    MJPEG AVI (functions/avi.py: RIFF container around four baseline
-    JPEGs) whose frames are constant grays from the doc's first 4
-    ASCII bytes. Constant 8x8 blocks roundtrip the all-ones-quant
-    JPEG bit-exactly, so each per-frame mean feature equals
-    ord(substr(text, k+1)) after the *255 rescale."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.avi import (
-        encode_gray_video,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_avi(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            frames = np.stack(
-                [np.full((16, 16), b, dtype=np.uint8) for b in raw]
-            )
-            out.append(encode_gray_video(frames, fps=10))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    avi_udf = F.pandas_udf(_to_avi, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("video").alias("kind"),
-        avi_udf(F.col("text")).alias("payload"),
-        F.lit("video/x-msvideo").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(400).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k") < 4)
-        .select(
-            "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-        )
-    )
-
-
 def q_multimodal_apng(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-PNG decode path END-TO-END with a hard oracle: build a
     REAL APNG (functions/png.py:encode_apng — acTL/fcTL/IDAT/fdAT,
@@ -2473,108 +1883,6 @@ def q_multimodal_apng(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "k", F.round(F.col("v") * 1020).cast("long").alias("pix4")
         )
-    )
-
-
-def q_multimodal_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio decode path END-TO-END with a hard oracle: build a REAL
-    8-bit PCM WAV (functions/wav.py) whose 16 samples are the doc's
-    first 16 ASCII bytes shifted by -80 (so signs mix), run it through
-    extract_media_features -> decode_wav -> audio_features, and check
-    the two SQL-expressible features: peak = max|b-80|/128 (an exact
-    dyadic rational, identical in float32 and float64) and
-    zero-crossing rate = sign-changes/15 (a 16-value rational set that
-    rounds identically at 6 decimals)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.wav import encode_wav
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_wav(texts):
-        out = []
-        for t in texts:
-            raw = np.frombuffer(
-                str(t).encode("utf-8")[:16], dtype=np.uint8
-            ).astype(np.int64)
-            out.append(encode_wav(raw + 48, sample_rate=8000, bits=8))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    wav_udf = F.pandas_udf(_to_wav, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 16)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        wav_udf(F.col("text")).alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(2).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k").isin(1, 2))  # peak, zcr — the SQL-expressible pair
-        .select("doc_id", "k", F.round(F.col("v"), 6).alias("v"))
-    )
-
-
-def q_multimodal_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 µ-law decode path END-TO-END with a hard oracle: the
-    doc's first 16 bytes ARE the companded stream (a format-7 WAV
-    whose data chunk is the raw text bytes), so the decoded samples
-    are exactly ULAW[byte]/32768 — and the ITU-T expansion formula
-    (complement, exponent/mantissa split, ((m<<3)+0x84)<<e - 0x84) is
-    plain integer SQL. Checks the same two exactly-representable
-    features as multimodal_wav: peak (15-bit dyadic rational) and
-    zero-crossing rate (n/15)."""
-    import struct as _s
-
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_g711(texts):
-        out = []
-        fmt = _s.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        for t in texts:
-            raw = str(t).encode("utf-8")[:16]
-            body = (
-                b"WAVE"
-                + b"fmt " + _s.pack("<I", len(fmt)) + fmt
-                + b"data" + _s.pack("<I", len(raw)) + raw
-            )
-            out.append(b"RIFF" + _s.pack("<I", len(body)) + body)
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    g711_udf = F.pandas_udf(_to_g711, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 16)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        g711_udf(F.col("text")).alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(2).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k").isin(1, 2))
-        .select("doc_id", "k", F.round(F.col("v"), 6).alias("v"))
     )
 
 
@@ -2746,7 +2054,7 @@ def q_multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrants equal ord(substr(text, q+1)) — with the BT.601 integer
     map for the lossy branch — so the twin is a single CASE over
     doc_id % 9. Per-format deep-dive constructions live in the
-    unregistered q_multimodal_<fmt> helpers + pytest suites."""
+    per-codec pytest suites."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import BinaryType
@@ -2875,8 +2183,7 @@ def q_multimodal_av(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned Rice residuals (functions/flac.py) — lossless, so the
     WAV arm's exact peak/zcr SQL binds the whole FLAC decode: bit
     reader, LPC prediction, Rice partitions, CRCs. Same constructions
-    as the unregistered q_multimodal_video/wav/g711 helpers and
-    tests/test_vp8_inter.py / tests/test_flac.py."""
+    as tests/test_vp8_inter.py / tests/test_flac.py."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import BinaryType
@@ -7408,87 +6715,6 @@ def oracle_sql() -> dict[str, str]:
     where d.n_chars >= 64
     """
 
-    # thumbnail quadrants of the 4-block constant-gray JPEG: k = i*4+j,
-    # quadrant q = 2*(i>=2) + (j>=2), pixel = text byte q (1-indexed)
-    sql["multimodal_jpeg"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    # progressive stream of the same flat image -> identical decode
-    sql["multimodal_jpeg_progressive"] = sql["multimodal_jpeg"]
-    # TIFF/BMP are lossless: same flat-quadrant twin
-    sql["multimodal_tiff"] = sql["multimodal_jpeg"]
-    sql["multimodal_bmp"] = sql["multimodal_jpeg"]
-
-    sql["multimodal_png"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_gif"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_webp"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    # lossy VP8: decoded luma == source byte per flat quadrant (exact
-    # at qi=0), then the neutral-chroma BT.601 integer map to RGB
-    sql["multimodal_webp_lossy"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k,
-           greatest(0, least(255,
-             (298 * (ord(substr(d.text, pos.p, 1)) - 16) + 128) // 256
-           )) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_video"] = """
-    with pos as (select unnest(generate_series(0, 3)) as k)
-    select d.doc_id, pos.k,
-           ord(substr(d.text, cast(pos.k + 1 as int), 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
     # APNG video path (q_multimodal_apng): constant RGB frames decode
     # to RGBA with alpha 255, so the frame mean is (3b + 255) / 4
     sql["multimodal_apng"] = """
@@ -8974,7 +8200,7 @@ def oracle_sql() -> dict[str, str]:
     union all
     select 'ivfpq' as method, * from ({sql["ann_topk"]})
     """
-    # one format per doc (doc_id % 8); lossless branches decode to the
+    # one format per doc (doc_id % 9); lossless branches decode to the
     # raw text byte, the lossy-VP8 branch applies the BT.601 integer map
     sql["multimodal_image"] = """
     with pos as (
@@ -9599,11 +8825,7 @@ def oracle_sql() -> dict[str, str]:
     for k in (
         "norm_email_phone", "norm_dates", "norm_address",
         "dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_simhash_fast",
-        "ann_topk", "ann_ivf",
-        "multimodal_jpeg", "multimodal_jpeg_progressive", "multimodal_png",
-        "multimodal_gif", "multimodal_webp", "multimodal_webp_lossy",
-        "multimodal_tiff", "multimodal_bmp", "multimodal_video",
-        "multimodal_wav", "multimodal_g711",
+        "ann_topk", "ann_ivf", "multimodal_wav", "multimodal_g711",
     ):
         del sql[k]
 

@@ -30,10 +30,12 @@ from pyspark.sql import functions as F
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
-    """Precondition: `edges` is distinct and single-orientation (the
-    canonicalized input, or small-star output, which is down-oriented)
-    — so the union IS the distinct symmetric set and needs no extra
-    dedup shuffle per round."""
+    """Precondition: `edges` is single-orientation (the canonicalized
+    input, or small-star output, which is down-oriented): no pair
+    appears as both (u, v) and (v, u). Duplicate rows are allowed —
+    they pass through and are tolerated downstream (large-star's
+    window min is duplicate-blind, small-star ends in a distinct), so
+    no extra dedup shuffle runs per round."""
     return edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

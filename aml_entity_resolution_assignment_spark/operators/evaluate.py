@@ -431,14 +431,20 @@ def pr_curve(
     table, fellegi.py:scored_pattern_counts). The integer sums are
     bit-identical to running the per-pair form on the expanded table,
     so pattern-based scorers can skip materializing per-pair scores
-    (guide §2.3).
+    (guide §2.3). A NULL weight fails the query rather than silently
+    dropping its pairs (the check rides the same select, no extra pass).
     """
     from pyspark.sql import Window
 
+    weight = []
+    if weight_col:
+        w = F.col(weight_col).cast("long")
+        ok = F.assert_true(w.isNotNull(), f"pr_curve: NULL {weight_col}")
+        weight = [F.coalesce(ok, w).alias("_w")]  # ok is NULL or raises
     sel = scored.select(
         F.round(F.col(score_col), decimals).alias("threshold"),
         F.col(truth_col).cast("int").alias("_t"),
-        *([F.col(weight_col).cast("long").alias("_w")] if weight_col else []),
+        *weight,
     )
     agg = sel.groupBy("threshold").agg(
         (F.sum("_w") if weight_col else F.count("*")).alias("_n"),

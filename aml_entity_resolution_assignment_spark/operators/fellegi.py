@@ -115,6 +115,41 @@ def fs_em(
     return lam, m, u
 
 
+def _collect_patterns(
+    pairs: DataFrame, fields: Sequence[str]
+) -> list[tuple[tuple[int, ...], int]]:
+    """Run the one pattern-count pass and collect it driver-side
+    (<= 2^k rows — an aggregate-sized collect): [(gamma, n), ...]."""
+    rows = pattern_counts(pairs, fields).collect()
+    return [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
+
+
+def _score_patterns(
+    pats: list[tuple[tuple[int, ...], int]],
+    lam: float,
+    m: list[float],
+    u: list[float],
+) -> list[tuple[tuple[int, ...], float, float]]:
+    """Per pattern (gamma, log2 match weight, posterior) under fitted
+    (lam, m, u) — the one scoring arithmetic behind both fellegi_sunter
+    and scored_pattern_counts, so the two agree by construction."""
+    out = []
+    for g, _n in pats:
+        wlog = 0.0
+        pm, pu = lam, 1.0 - lam
+        for j in range(len(g)):
+            if g[j]:
+                wlog += math.log2(m[j] / u[j])
+                pm *= m[j]
+                pu *= u[j]
+            else:
+                wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
+                pm *= 1.0 - m[j]
+                pu *= 1.0 - u[j]
+        out.append((g, float(wlog), float(pm / (pm + pu))))
+    return out
+
+
 def fit_params(
     pairs: DataFrame,
     fields: Sequence[str],
@@ -123,8 +158,7 @@ def fit_params(
 ) -> tuple[float, list[float], list[float]]:
     """Run the one distributed pattern-count pass + driver EM and
     return the fitted (lambda, m, u)."""
-    rows = pattern_counts(pairs, fields).collect()
-    pats = [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
+    pats = _collect_patterns(pairs, fields)
     return fs_em(pats, len(fields), iters=iters, init=init)
 
 
@@ -148,25 +182,10 @@ def scored_pattern_counts(
     an aggregate-sized table (guide §2.3: aggregate before you
     shuffle). Integer-count aggregates over this table are
     bit-identical to aggregating the per-pair scored output."""
-    rows = pattern_counts(pairs, fields).collect()
-    pats = [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
-    k = len(fields)
-    lam, m, u = fs_em(pats, k, iters=iters, init=init, fix_u=fix_u)
-    scored = []
-    for g, n in pats:
-        wlog = 0.0
-        pm, pu = lam, 1.0 - lam
-        for j in range(k):
-            if g[j]:
-                wlog += math.log2(m[j] / u[j])
-                pm *= m[j]
-                pu *= u[j]
-            else:
-                wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
-                pm *= 1.0 - m[j]
-                pu *= 1.0 - u[j]
-        post = pm / (pm + pu)
-        scored.append(tuple(g) + (int(n), float(wlog), float(post)))
+    pats = _collect_patterns(pairs, fields)
+    lam, m, u = fs_em(pats, len(fields), iters=iters, init=init, fix_u=fix_u)
+    weights = _score_patterns(pats, lam, m, u)
+    scored = [g + (n, w, p) for (g, w, p), (_, n) in zip(weights, pats)]
     schema = (
         ", ".join(f"{f} int" for f in fields)
         + ", n long, match_weight double, posterior double"
@@ -203,29 +222,11 @@ def fellegi_sunter(
         lam, m, u = params
         pats = [(g, 0) for g in itertools.product((0, 1), repeat=k)]
     else:
-        pat_df = pattern_counts(pairs, fields)
-        rows = pat_df.collect()  # <= 2^k rows — aggregate-sized collect
-        pats = [
-            (tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows
-        ]
+        pats = _collect_patterns(pairs, fields)
         lam, m, u = fs_em(pats, k, iters=iters, init=init, fix_u=fix_u)
 
     # score each observed pattern once, broadcast-join back by pattern
-    scored = []
-    for g, _n in pats:
-        wlog = 0.0
-        pm, pu = lam, 1.0 - lam
-        for j in range(k):
-            if g[j]:
-                wlog += math.log2(m[j] / u[j])
-                pm *= m[j]
-                pu *= u[j]
-            else:
-                wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
-                pm *= 1.0 - m[j]
-                pu *= 1.0 - u[j]
-        post = pm / (pm + pu)
-        scored.append(tuple(g) + (float(wlog), float(post)))
+    scored = [g + (w, p) for g, w, p in _score_patterns(pats, lam, m, u)]
     spark = pairs.sparkSession
     schema = (
         ", ".join(f"{f} int" for f in fields)

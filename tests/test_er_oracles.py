@@ -1,0 +1,52 @@
+"""The registered ER-core queries against their DuckDB oracle twins at
+sf0.001, canonicalized exactly as the full oracle sweep does
+(tools/check_oracles.py) — a drift in the candidate operator, the pair
+features, the F-S family or the clustering kernels fails here."""
+
+import os
+
+import duckdb
+import pytest
+
+import __spark_entry__ as entry
+from aml_entity_resolution_assignment_spark.operators.candidates import (
+    release_persisted,
+)
+from tools import check_oracles
+
+# the sf0.001 sibling of the oracle sweep's default data directory
+SF = os.path.join(os.path.dirname(check_oracles.SF), "sf0.001")
+
+NAMES = [
+    "candidate_pairs", "pair_features", "rule_cascade",
+    "cluster_cohesion", "hac_single", "cluster_sweep",
+    "fs_pr_curve",
+]
+
+
+@pytest.fixture(scope="module")
+def con():
+    c = duckdb.connect()
+    for t in check_oracles.TABLES:
+        c.execute(
+            f"create view {t} as select * from read_parquet('{SF}/{t}.parquet')"
+        )
+    yield c
+    c.close()
+
+
+def _canon(df):
+    return check_oracles.canon(df.sort_index(axis=1))
+
+
+@pytest.mark.parametrize("name", NAMES)
+def test_er_core_query_matches_oracle(spark, con, name):
+    try:
+        got = _canon(entry.queries()[name](spark, SF).toPandas())
+    finally:
+        release_persisted()
+    want = _canon(con.execute(entry.oracle_sql()[name]).df())
+    assert len(got) > 0
+    assert list(got.columns) == list(want.columns)
+    assert got.shape == want.shape
+    assert (got.astype(str).values == want.astype(str).values).all()

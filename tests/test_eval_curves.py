@@ -44,6 +44,15 @@ def test_pr_curve_no_positives(spark):
     assert all(r.recall == 0.0 and r.f1 == 0.0 for r in rows)
 
 
+def test_pr_curve_null_weight_fails_loudly(spark):
+    # an aggregate row with a NULL count must not silently drop its pairs
+    agg = spark.createDataFrame(
+        [(0.9, 1, 2), (0.2, 0, None)], "posterior double, is_match int, n long"
+    )
+    with pytest.raises(Exception, match="pr_curve: NULL n"):
+        pr_curve(agg, weight_col="n").collect()
+
+
 def test_calibration_bins_and_ece(spark):
     out = {r.bin: r for r in calibration_bins(_scored(spark)).collect()}
     assert set(out) == {9, 2}

@@ -40,7 +40,7 @@ def main() -> int:
         i = argv.index("--sf-dir")
         SF = argv[i + 1]
         argv = argv[:i] + argv[i + 2:]
-    spark = get_spark("oracle-check", master="local[16]")
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
