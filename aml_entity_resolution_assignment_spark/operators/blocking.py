@@ -156,15 +156,15 @@ def block_stats(keyed: DataFrame, keys: list[str] | None = None, top: int = 3) -
     return out
 
 
-def blocking_health(keyed: DataFrame, n_pairs: int) -> dict[str, float]:
-    """Reduction ratio + pairs-per-record (matching.py:39-48)."""
-    n = keyed.count()
-    total_possible = n * (n - 1) / 2
+def blocking_health(n_records: int, n_pairs: int) -> dict[str, float]:
+    """Reduction ratio + pairs-per-record (matching.py:39-48) from the
+    keyed record count and the candidate pair count."""
+    total_possible = n_records * (n_records - 1) / 2
     return {
-        "total_records": float(n),
+        "total_records": float(n_records),
         "candidate_pairs": float(n_pairs),
         "reduction_ratio": 1.0 - (n_pairs / total_possible) if total_possible else 0.0,
-        "pairs_per_record": (n_pairs / n) if n else 0.0,
+        "pairs_per_record": (n_pairs / n_records) if n_records else 0.0,
     }
 
 

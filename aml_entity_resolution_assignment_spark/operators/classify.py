@@ -216,9 +216,10 @@ def classify(features: DataFrame, thresholds: RuleThresholds | None = None) -> D
     )
 
 
-def classification_counts(classified: DataFrame) -> DataFrame:
-    """C12 status counts (matching.py:565-568) -> metrics."""
-    return classified.groupBy("match_type").agg(F.count("*").alias("n_pairs"))
+# every match_type value classify() and classify_fs() emit; the
+# pipeline observes one count per value (C12 status counts,
+# matching.py:565-568)
+MATCH_TYPES = ("match", "review", "no_match")
 
 
 # ---------------------------------------------------------------------------

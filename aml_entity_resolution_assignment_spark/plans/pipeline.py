@@ -3,11 +3,17 @@
 Reference lifecycle (/root/reference/src/matching.py:681-715):
 load -> candidates -> features -> classify -> cluster -> evaluate.
 Here every stage materializes to a parquet table under `work_dir`
-(Iceberg-style layout: one directory per stage + _STAGE_MANIFEST.json),
+(Iceberg-style layout: one directory per stage + _MANIFEST_<stage>.json),
 so a restarted run skips completed stages (north_rule: resumable
 mid-stage). A metrics table records per-stage row counts and wall time
 (analog of the reference's Prometheus counters, api.py:34-36, and
 blocking health report, matching.py:21-76).
+
+Beyond the jobs a stage's own build runs (CC rounds, EM fits), a stage
+is ONE Spark action: its write. Every count the pipeline reports (stage
+rows, blocking health, match-type counts, entity count) is an observed
+metric of that write (`DataFrame.observe`), kept in the stage manifest
+so a resumed stage reports it without touching the data.
 """
 
 from __future__ import annotations
@@ -16,14 +22,15 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, candidates, classify, cluster, features
 from ..sources import io
-from ..operators.classify import RuleThresholds
+from ..operators.classify import MATCH_TYPES, RuleThresholds
 
 
 @dataclass
@@ -78,19 +85,24 @@ class PipelineConfig:
 
 class StageRunner:
     """Materialize-or-reuse executor: each stage writes parquet + a
-    manifest (row count, schema, upstream fingerprint); on resume, a
-    stage whose manifest matches its fingerprint is re-read instead of
-    recomputed — per-stage lineage, per-stage counters."""
+    manifest (row count, observed metrics, schema, upstream
+    fingerprint); on resume, a stage whose manifest matches its
+    fingerprint is re-read instead of recomputed — per-stage lineage,
+    per-stage counters.
+
+    A built stage adds one Spark action to its build, the write: the
+    row count and any caller `observe` aggregates are observed metrics
+    of that write (no re-read count), and the read-back takes the built
+    frame's schema (no inference job). `observed[stage]` holds them for
+    the caller, whether the stage was built or resumed."""
 
     def __init__(self, spark: SparkSession, cfg: PipelineConfig, run_id: str):
         self.spark = spark
         self.cfg = cfg
         self.run_id = run_id
         self.metrics: list[dict] = []
+        self.observed: dict[str, dict] = {}
         os.makedirs(cfg.work_dir, exist_ok=True)
-
-    def _path(self, stage: str) -> str:
-        return os.path.join(self.cfg.work_dir, f"stage={stage}")
 
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.cfg.work_dir, f"_MANIFEST_{stage}.json")
@@ -101,23 +113,25 @@ class StageRunner:
         fingerprint: str,
         build: Callable[[], DataFrame],
         bloom_filter_cols: list[str] | None = None,
+        observe: Sequence[Column] = (),
     ) -> DataFrame:
         mpath = self._manifest_path(stage)
-        dpath = self._path(stage)
         if self.cfg.resume and os.path.exists(mpath):
             with open(mpath) as f:
                 manifest = json.load(f)
-            if manifest.get("fingerprint") == fingerprint:
+            # a manifest without observed counts predates them: rebuild
+            # rather than report the stage with counts missing
+            if manifest.get("fingerprint") == fingerprint and "observed" in manifest:
+                self.observed[stage] = manifest["observed"]
                 self.metric(stage, "resumed", 1.0)
                 return io.read_table(self.spark, self.cfg.work_dir, f"stage={stage}")
         t0 = time.monotonic()
         df = build()
-        io.write_table(
-            df, self.cfg.work_dir, f"stage={stage}",
-            bloom_filter_cols=bloom_filter_cols,
+        observed = self._write_observed(
+            df, stage, bloom_filter_cols,
+            [F.count(F.lit(1)).alias("rows"), *observe],
         )
-        out = io.read_table(self.spark, self.cfg.work_dir, f"stage={stage}")
-        n = out.count()
+        n = observed["rows"]
         # stage output is on disk: intermediates cached inside lazy
         # candidate plans (oversized-key tables) are no longer needed
         candidates.release_persisted()
@@ -128,15 +142,53 @@ class StageRunner:
                     "stage": stage,
                     "fingerprint": fingerprint,
                     "rows": n,
+                    "observed": observed,
                     "wall_sec": wall,
                     "run_id": self.run_id,
-                    "schema": out.schema.simpleString(),
+                    "schema": df.schema.simpleString(),
                 },
                 f,
             )
+        self.observed[stage] = observed
         self.metric(stage, "rows_out", float(n))
         self.metric(stage, "wall_sec", wall)
-        return out
+        return io.read_table(
+            self.spark, self.cfg.work_dir, f"stage={stage}", schema=df.schema
+        )
+
+    def _write_observed(
+        self,
+        df: DataFrame,
+        stage: str,
+        bloom_filter_cols: list[str] | None,
+        exprs: list[Column],
+    ) -> dict:
+        """Write `df` as the stage table; return `exprs` observed on the
+        write.
+
+        The write runs on a clone of the session. An `Observation` gives
+        its session an ObservationManager, which Spark 4.1 keeps in a
+        non-transient field, so the session can no longer be
+        Java-serialized, and Spark ML models capture their session
+        through their training summary when they transform (fitting and
+        applying a LogisticRegression then fails). The clone takes that
+        manager instead and drops its listener after the write, so the
+        clone can be collected."""
+        jclone = self.spark._jsparkSession.cloneSession()
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            jclone, df._jdf.queryExecution().analyzed()
+        )
+        clone = SparkSession(self.spark.sparkContext, jclone)
+        obs = Observation()
+        try:
+            io.write_table(
+                DataFrame(jdf, clone).observe(obs, *exprs),
+                self.cfg.work_dir, f"stage={stage}",
+                bloom_filter_cols=bloom_filter_cols,
+            )
+            return obs.get
+        finally:
+            jclone.listenerManager().clear()
 
     def metric(self, stage: str, name: str, value: float, detail: str = "") -> None:
         self.metrics.append(
@@ -152,8 +204,9 @@ class StageRunner:
     def flush_metrics(self) -> None:
         if not self.metrics:
             return
+        # from pandas through Arrow: no Python RDD, no Python workers
         df = self.spark.createDataFrame(
-            [tuple(m.values()) for m in self.metrics],
+            pd.DataFrame(self.metrics),
             "run_id string, stage string, metric string, value double, detail string",
         )
         io.write_table(df, self.cfg.work_dir, "metrics", mode="append")
@@ -208,7 +261,9 @@ def run_pipeline(
     )
 
     # blocking health (E7) into metrics
-    health = blocking.blocking_health(keyed, pairs.count())
+    health = blocking.blocking_health(
+        r.observed["pages_keyed"]["rows"], r.observed["candidate_pairs"]["rows"]
+    )
     for k, v in health.items():
         r.metric("candidate_pairs", k, v)
 
@@ -236,21 +291,34 @@ def run_pipeline(
             scored = score_with_model(spark, feats, cfg.model_path)
         return classify.classify(scored, cfg.thresholds)
 
-    classified = r.run("classified_pairs", fp + "|cls", _classify)
+    classified = r.run(
+        "classified_pairs", fp + "|cls", _classify,
+        observe=[
+            F.count_if(F.col("match_type") == t).alias(f"n_{t}")
+            for t in MATCH_TYPES
+        ],
+    )
 
+    # every component is labelled by its minimum member, itself a row:
+    # one row per entity has url == predicted_entity_id
     entity_map = r.run(
         "entity_map",
         fp + "|cc",
         lambda: cluster.resolve_entities(classified, keyed),
+        observe=[
+            F.count_if(F.col("url") == F.col("predicted_entity_id")).alias(
+                "n_entities"
+            )
+        ],
     )
 
-    for row in classify.classification_counts(classified).collect():
-        r.metric("classified_pairs", f"n_{row['match_type']}", float(row["n_pairs"]))
-    r.metric(
-        "entity_map",
-        "n_entities",
-        float(entity_map.select("predicted_entity_id").distinct().count()),
-    )
+    # C12 status counts (matching.py:565-568); a type no pair has gets
+    # no row
+    for t in MATCH_TYPES:
+        n = r.observed["classified_pairs"][f"n_{t}"]
+        if n > 0:
+            r.metric("classified_pairs", f"n_{t}", float(n))
+    r.metric("entity_map", "n_entities", float(r.observed["entity_map"]["n_entities"]))
     r.flush_metrics()
 
     return {

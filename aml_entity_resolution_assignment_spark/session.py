@@ -38,12 +38,22 @@ _DEFAULTS = {
     "spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
     "spark.io.compression.zstd.level": "1",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # single-JVM local mode: the "driver" heap is the whole cluster's
-    # memory; size it like an executor fleet, not a driver
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"),
     "spark.ui.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
 }
+
+
+def default_driver_memory() -> str:
+    """`SPARK_GRAFT_DRIVER_MEM` if set (read per call, so a value set
+    after import counts), else half of physical RAM capped at 64g.
+    Single-JVM local mode: the "driver" heap is the whole cluster's
+    memory, so it is sized like an executor fleet, but never past what
+    the host has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 64 * 1024)}m"
 
 
 def get_spark(
@@ -62,7 +72,7 @@ def get_spark(
         master = f"local[{cpus}]" if cpus else "local[*]"
 
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
+    conf = dict(_DEFAULTS, **{"spark.driver.memory": default_driver_memory()})
     # shuffle partitions track the core count (2x cores, like a cluster
     # sized via spark-submit): at local[4] 32 partitions is pure task-
     # scheduling overhead per stage; at local[32] 64 gives AQE headroom

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import time
 
 
@@ -107,12 +108,13 @@ def main() -> None:
         **kw,
     )
     t0 = time.monotonic()
-    out = run_pipeline(
-        spark, pages, cfg, run_id=args.run_id, input_fingerprint=input_fp
-    )
-    n_pages = out["entity_map"].count()
-    n_clusters = out["entity_map"].select("predicted_entity_id").distinct().count()
+    run_pipeline(spark, pages, cfg, run_id=args.run_id, input_fingerprint=input_fp)
     wall = time.monotonic() - t0
+    # the entity_map stage write observed both counts (built or resumed)
+    with open(os.path.join(args.work_dir, "_MANIFEST_entity_map.json")) as f:
+        manifest = json.load(f)
+    n_pages = manifest["rows"]
+    n_clusters = manifest["observed"]["n_entities"]
     print(
         json.dumps(
             {

@@ -3,6 +3,8 @@ synthetic pages -> full pipeline -> pairwise F1 >= 0.99 on labeled pairs
 at the blocking keys (BASELINE.json metric) + checkpoint/resume
 equivalence."""
 
+import json
+
 import pytest
 
 from aml_entity_resolution_assignment_spark.operators.evaluate import (
@@ -11,6 +13,7 @@ from aml_entity_resolution_assignment_spark.operators.evaluate import (
 )
 from aml_entity_resolution_assignment_spark.plans.pipeline import (
     PipelineConfig,
+    StageRunner,
     run_pipeline,
 )
 from aml_entity_resolution_assignment_spark.sources.generator import generate_pages
@@ -77,6 +80,19 @@ def test_resume_skips_stages_and_is_identical(spark, pipeline_out):
     ).count()
     assert resumed >= 5
 
+    # resumed stages report the counts their manifests observed: every
+    # metric but the per-build ones matches the first run
+    def reported(run_id):
+        return sorted(
+            (r["stage"], r["metric"], r["value"], r["detail"])
+            for r in m.where(
+                (m.run_id == run_id)
+                & ~m.metric.isin("wall_sec", "resumed", "rows_out")
+            ).collect()
+        )
+
+    assert reported("run1") == reported("run0") != []
+
 
 def test_metrics_table_has_blocking_health(spark, pipeline_out):
     _, _, _, work, _ = pipeline_out
@@ -85,6 +101,90 @@ def test_metrics_table_has_blocking_health(spark, pipeline_out):
     m = read_metrics(spark, work)
     names = {r["metric"] for r in m.select("metric").distinct().collect()}
     assert {"reduction_ratio", "pairs_per_record", "rows_out", "wall_sec"} <= names
+
+
+def test_class_and_entity_counts_match_the_stage_tables(spark, pipeline_out):
+    """The observed n_<match_type> and n_entities metrics equal the
+    counts a re-read of the written stages gives."""
+    _, _, out, work, _ = pipeline_out
+    from aml_entity_resolution_assignment_spark.plans.pipeline import read_metrics
+
+    m = read_metrics(spark, work).where("run_id = 'run0'")
+    got = {r["metric"]: r["value"] for r in m.collect()}
+    want = {
+        f"n_{r['match_type']}": float(r["count"])
+        for r in out["classified"].groupBy("match_type").count().collect()
+    }
+    types = ("n_match", "n_review", "n_no_match")
+    assert {k: v for k, v in got.items() if k in types} == want
+    assert got["n_entities"] == float(
+        out["entity_map"].select("predicted_entity_id").distinct().count()
+    )
+
+
+def test_stage_is_one_spark_job(spark, tmp_path):
+    """A shuffle-free stage runs only its write: the row count is an
+    observed metric of the write and the read-back takes the built
+    schema, so no count or schema-inference job follows."""
+    sc = spark.sparkContext
+    r = StageRunner(
+        spark, PipelineConfig(work_dir=str(tmp_path), resume=False), "run0"
+    )
+    sc.setJobGroup("stage-budget", "one stage")
+    try:
+        out = r.run("ids", "fp", lambda: spark.range(1000))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("stage-budget")) == 1
+    assert r.observed["ids"] == {"rows": 1000}
+    assert out.count() == 1000
+
+
+def test_manifest_without_observed_counts_is_rebuilt(spark, tmp_path):
+    """Resume reuses a stage only when its manifest carries the observed
+    counts; an older manifest without them rebuilds the stage."""
+    cfg = PipelineConfig(work_dir=str(tmp_path))
+
+    def run(run_id, build):
+        r = StageRunner(spark, cfg, run_id)
+        r.run("ids", "fp", build)
+        return r
+
+    run("run0", lambda: spark.range(10))
+    mpath = tmp_path / "_MANIFEST_ids.json"
+    manifest = json.loads(mpath.read_text())
+    del manifest["observed"]
+    mpath.write_text(json.dumps(manifest))
+
+    r = run("run1", lambda: spark.range(10))
+    assert r.observed["ids"] == {"rows": 10}
+    assert "resumed" not in {m["metric"] for m in r.metrics}
+
+    def no_build():
+        raise AssertionError("a stage with observed counts was rebuilt")
+
+    r = run("run2", no_build)
+    assert r.observed["ids"] == {"rows": 10}
+    assert "resumed" in {m["metric"] for m in r.metrics}
+
+
+def test_stage_write_leaves_the_session_usable_for_ml(spark, tmp_path):
+    """Observing a stage write must not stop the session from being
+    serialized: a fitted LogisticRegression captures it when it
+    transforms."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    r = StageRunner(
+        spark, PipelineConfig(work_dir=str(tmp_path), resume=False), "run0"
+    )
+    r.run("ids", "fp", lambda: spark.range(10))
+    train = spark.createDataFrame(
+        [(Vectors.dense([float(i)]), float(i > 2)) for i in range(6)],
+        ["features", "label"],
+    )
+    model = LogisticRegression(maxIter=5).fit(train)
+    assert len(model.transform(train).collect()) == 6
 
 
 def test_bcubed_hand_computed_and_properties(spark):
