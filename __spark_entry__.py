@@ -470,20 +470,12 @@ _FS_ITERS = 10
 
 def _fs_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary agreement vector over the deterministic pair features
-    (the gamma of the Fellegi-Sunter model). Persisted (released by
-    the harness via candidates.release_persisted) because the F-S
-    queries traverse it 2-3x: pattern-count collect, scoring join,
-    and the TF variant's u fit — without the persist each traversal
-    re-derives the candidate self-joins."""
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
-
+    (the gamma of the Fellegi-Sunter model). A lazy local checkpoint
+    because the F-S queries traverse it 2-3x: pattern-count collect,
+    scoring join, and the TF variant's u fit — without it each
+    traversal re-derives the candidate self-joins."""
     feats = q_pair_features(spark, sf_dir)
-    flagged = _flag_select(feats)
-    flagged = flagged.persist()
-    _PERSISTED.append(flagged)
-    return flagged
+    return _flag_select(feats).localCheckpoint(eager=False)
 
 
 def _flag_select(feats: DataFrame) -> DataFrame:
@@ -574,13 +566,9 @@ def _fs_ml_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-ish / close / disagree), binary lang, and a source flag
     with deterministic injected missingness ((id_a+id_b) % 7 == 0 —
     the 'field not collected' case the multilevel model must ignore).
-    Persisted like _fs_flagged (pattern pass + scoring join)."""
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
-
+    Checkpointed like _fs_flagged (pattern pass + scoring join)."""
     feats = q_pair_features(spark, sf_dir)
-    flagged = feats.select(
+    return feats.select(
         "id_a",
         "id_b",
         F.when(F.col("prefix_score") >= 0.9, 2)
@@ -594,9 +582,7 @@ def _fs_ml_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.col("source_match").cast("int"))
         .alias("g_source"),
-    ).persist()
-    _PERSISTED.append(flagged)
-    return flagged
+    ).localCheckpoint(eager=False)
 
 
 def q_fellegi_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,9 +616,9 @@ def q_fs_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the pair table is traversed ONCE (the pattern groupBy) instead
     of three times (pattern pass + per-pair score join + re-aggregate);
     bit-identical by integer-sum equivalence, pinned by the unchanged
-    per-pair DuckDB twin. The shared persisted _fs_flagged is kept (an
-    unpersisted one-pass variant measured SLOWER in interleaved A/B —
-    the persist costs nothing on a single traversal and keeps the
+    per-pair DuckDB twin. The shared checkpointed _fs_flagged is kept
+    (an uncached one-pass variant measured SLOWER in interleaved A/B —
+    the cache costs nothing on a single traversal and keeps the
     helper semantics identical across the F-S family)."""
     assert "g_source" in _FS_FIELDS  # truth must be pattern-determined
     pat = FS.scored_pattern_counts(
@@ -678,14 +664,9 @@ def q_classifier_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair key + one aggregate."""
     # ONE pair_features scan feeds both classifiers (they share the
     # candidate-pair + Arrow-kernel lineage, the dominant cost);
-    # persisted because the cascade plan, the F-S pattern collect, and
-    # the F-S scoring join all traverse it
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
-
-    feats = q_pair_features(spark, sf_dir).persist()
-    _PERSISTED.append(feats)
+    # checkpointed because the cascade plan, the F-S pattern collect,
+    # and the F-S scoring join all traverse it
+    feats = q_pair_features(spark, sf_dir).localCheckpoint(eager=False)
     rc = CL.classify(_cascade_feats(feats)).select(
         "id_a", "id_b", "match_type"
     )
@@ -1120,7 +1101,9 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the sf files are one parquet split: spread the md5-gram explode
     # across cores (at 100 TB the input splits provide this for free)
-    d = _docs(spark, sf_dir).repartition(32, "doc_id")
+    d = _docs(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
     target = d.where(F.col("doc_id") % 5 == 0)
     out = dsir_weights(d, target, buckets=4096)
     return out.select(
@@ -1146,7 +1129,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel across cores (at 100 TB the input splits provide this)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).repartition(32, "vec_id")
+    ).repartition(spark.sparkContext.defaultParallelism, "vec_id")
     xs = emb.where((F.col("vec_id") % 2 == 0) & (F.col("vec_id") < 600))
     ys = emb.where((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 1200))
     out = margin_mine(xs, ys, k=4)
@@ -1551,7 +1534,8 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         _docs(spark, sf_dir)
         .select("doc_id", "text")
-        .repartition(32, "doc_id")  # one parquet split at bench scale
+        # one parquet split at bench scale
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
     spans = D.duplicated_substring_spans(d, "doc_id", "text", min_len=50)
     stripped = D.strip_duplicated_spans(d, spans, "doc_id", "text")
@@ -1934,17 +1918,13 @@ def q_dedup_simhash_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     precomputed-vocabulary VALUES twin).
 
     Fused physical form: ONE scan computes both simhashes + band
-    arrays (persisted), the bands explode variant-tagged — band key
+    arrays (checkpointed), the bands explode variant-tagged — band key
     hashed with the variant index, record id mapped to doc_id*2+v so
     pairs can only form within a variant and the id order inside a
     variant is preserved — and ONE salted self-join + one hydration
     chain serves both variants. Row set identical to the former
     per-variant union (same band keys per variant, same hamming
     verify), which the oracle pins."""
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
-
     d = _docs(spark, sf_dir)
     norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     hashed = (
@@ -1960,9 +1940,8 @@ def q_dedup_simhash_both(spark: SparkSession, sf_dir: str) -> DataFrame:
             MH.simhash_bands_udf()(F.col("_sh0")).alias("_b0"),
             MH.simhash_bands_udf()(F.col("_sh1")).alias("_b1"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    _PERSISTED.append(hashed)
     empty = F.array().cast("array<struct<v:int,b:bigint>>")
     tagged = F.concat(
         F.coalesce(
@@ -3974,9 +3953,10 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         pmi_collocations,
     )
 
-    return pmi_collocations(
-        _docs(spark, sf_dir).repartition(32, "doc_id"), min_count=5, k=20
+    d = _docs(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
     )
+    return pmi_collocations(d, min_count=5, k=20)
 
 
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4064,7 +4044,9 @@ def q_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_backoff_score,
     )
 
-    d = _docs(spark, sf_dir).repartition(32, "doc_id")
+    d = _docs(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
     lm = d.where(F.col("doc_id") % 3 != 0)
     return trigram_backoff_score(d, lm_docs=lm).select(
         "doc_id", "n_scored", F.round("lm_score", 6).alias("lm_score")

@@ -256,19 +256,14 @@ def lsh_near_dup_pairs(
     exact cosine verify >= min_cosine."""
     from .candidates import band_join_pairs
 
-    from .candidates import _PERSISTED
-
     sigs = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
         rp_band_udf(dim)(F.col(vec_col)).alias("_bands"),
     )
-    # consumed by 3 join subtrees (banding + both verify sides): persist
-    # so the banding UDF runs once; released via release_persisted()
-    from pyspark import StorageLevel
-
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sigs)
+    # consumed by 3 join subtrees (banding + both verify sides):
+    # checkpointed so the banding UDF runs once
+    sigs = sigs.localCheckpoint(eager=False)
     pairs = band_join_pairs(sigs, "_bands", id_col="_id")
     a = sigs.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     b = sigs.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))

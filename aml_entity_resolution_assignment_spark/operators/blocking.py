@@ -178,17 +178,14 @@ def _global_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
     #partitions-row collect for the cumulative bases. Partitioning-
     invariant as long as `order_cols` is a total order (callers include
     a unique id as the final column)."""
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
     from pyspark.sql.window import Window
 
     cols = [F.col(c) for c in order_cols]
     d = df.repartitionByRange(*cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    d = d.persist()  # pin partition assignment between the two reads
-    _PERSISTED.append(d)  # released via candidates.release_persisted()
+    # pin partition assignment between the two reads
+    d = d.localCheckpoint(eager=False)
     w = Window.partitionBy("_pid").orderBy(*cols)
     totals = sorted(
         d.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]

@@ -29,52 +29,16 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_CAP = 2000  # block size above which the self-join is salted
 DEFAULT_DROP_CAP = 200_000  # block size above which the block is dropped
 
-# Intermediates persisted by self_join_pairs (the oversized-key table)
-# live until the consumer has materialized its output — the producer
-# cannot unpersist inside a lazy plan. Handles are tracked here and
-# released at materialization boundaries (StageRunner after a stage
-# write, bench after each query); long-lived sessions should call
-# release_persisted() after collecting/writing any candidate-derived
-# DataFrame, else cached blocks accumulate for the session's lifetime.
-_PERSISTED: list[DataFrame] = []
-
 
 def release_persisted() -> None:
-    """Unpersist every intermediate cached by self_join_pairs since the
-    last release. Safe to call once downstream output is materialized
-    (written/collected); a later re-execution of an un-released plan
-    just recomputes the tiny key table. Prefer `persisted_scope()` in
-    library code — it releases only the handles created inside the
-    scope, so one consumer's boundary can't drop another in-flight
-    plan's cache."""
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped: nothing to release
+    """No-op, kept for callers of the former cache registry.
 
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def persisted_scope():
-    """Scoped release of self_join_pairs caches: on exit, unpersist only
-    the handles registered while the scope was open. Materialize (write/
-    collect) every candidate-derived output BEFORE the scope closes — a
-    later re-execution of an un-released plan recomputes the tiny key
-    table rather than corrupting anything, but loses the cache."""
-    mark = len(_PERSISTED)
-    try:
-        yield
-    finally:
-        while len(_PERSISTED) > mark:
-            df = _PERSISTED.pop()
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+    Intermediates read more than once are lazy local checkpoints
+    (`localCheckpoint(eager=False)`): the first action that reads one
+    materializes it (under AQE the shuffle map stages below it run when
+    it is built), and Spark's ContextCleaner frees its blocks once the
+    DataFrame holding it is garbage-collected. Nothing is left in
+    the session's CacheManager to release."""
 
 
 def _pair_cols(l_id: str = "l_id", r_id: str = "r_id"):
@@ -104,22 +68,22 @@ def self_join_pairs(
         F.col(key).alias("bk"), F.col(id_col).alias("rid")
     )
 
-    # The whole hot/cold split is LAZY — no eager pre-job to test for
-    # hot keys (at 10^12 rows that test is a full extra pass). The
+    # The hot/cold split never branches on data — no pre-job to test
+    # for hot keys (at 10^12 rows that test is a full extra pass). The
     # oversized-key table is tiny by construction (every row represents
     # > salt_cap records), so it broadcasts; when no key is hot, the
     # anti-join is against an empty broadcast (near-free) and AQE
-    # collapses the empty hot-pair branch at runtime. `oversized` is
-    # persisted so the key-size aggregation shuffles ONCE and its tiny
-    # result feeds all three broadcast builds from cache (Catalyst does
-    # not reuse an exchange nested under distinct broadcast stages).
-    from pyspark import StorageLevel
-
+    # collapses the empty hot-pair branch at runtime. `oversized` is a
+    # lazy local checkpoint so the key-size aggregation shuffles ONCE
+    # and its tiny result feeds all three broadcast builds (Catalyst
+    # does not reuse an exchange nested under distinct broadcast
+    # stages); its blocks die with the plans that hold it. Under AQE
+    # building the checkpoint already runs that shuffle's map stage;
+    # the action reuses its output, so it is not an extra pass.
     sizes = recs.groupBy("bk").agg(F.count("*").alias("cnt"))
-    oversized = sizes.where(F.col("cnt") > salt_cap).persist(
-        StorageLevel.MEMORY_AND_DISK
+    oversized = sizes.where(F.col("cnt") > salt_cap).localCheckpoint(
+        eager=False
     )
-    _PERSISTED.append(oversized)  # released via release_persisted()
 
     hot_keys = oversized.where(F.col("cnt") <= drop_cap).select(
         "bk", F.ceil(F.col("cnt") / salt_cap).cast("int").alias("n_salt")

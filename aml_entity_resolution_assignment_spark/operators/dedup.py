@@ -30,21 +30,8 @@ from pyspark.sql.types import DoubleType
 
 from ..functions import minhash as mh
 from ..functions import similarity as sim
-from .candidates import _PERSISTED, band_join_pairs
+from .candidates import band_join_pairs
 from .cluster import connected_components
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    """Persist a signature table consumed by THREE join subtrees
-    (banding + both verify hydration sides) — without this the
-    Python-UDF signature computation runs three times. Registered in
-    the shared release registry (candidates.release_persisted) so
-    materialization boundaries can free it."""
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(out)
-    return out
 
 
 def exact_duplicate_groups(
@@ -114,7 +101,9 @@ def minhash_near_dup_pairs(
             mh.minhash_udf(bands * rows)(norm)
         ).alias("_bands"),
     )
-    sigs = _persist_tracked(sigs)
+    # read by THREE join subtrees (banding + both verify hydration
+    # sides): checkpointed so the Python-UDF signatures run once
+    sigs = sigs.localCheckpoint(eager=False)
     pairs = band_join_pairs(sigs, "_bands", id_col="_id")
     if not verify:
         return pairs
@@ -146,7 +135,7 @@ def simhash_near_dup_pairs(
         F.col(id_col).alias("_id"),
         mh.simhash_udf(token_hash)(norm).alias("_sh"),
     ).withColumn("_bands", mh.simhash_bands_udf()(F.col("_sh")))
-    hashed = _persist_tracked(hashed)
+    hashed = hashed.localCheckpoint(eager=False)
     pairs = band_join_pairs(hashed, "_bands", id_col="_id")
     a = hashed.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
     b = hashed.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
@@ -338,13 +327,11 @@ def semdedup_pairs(
         )
         return pd.Series(d2.argmin(axis=1).astype(np.int32), index=vecs.index)
 
-    assigned = _persist_tracked(
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            _assign(F.col(vec_col)).alias("_cell"),
-        )
-    )
+    assigned = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).cast("array<double>").alias("_v"),
+        _assign(F.col(vec_col)).alias("_cell"),
+    ).localCheckpoint(eager=False)
     right = assigned
     if max_cluster is not None:
         from pyspark.sql import Window

@@ -80,14 +80,24 @@ def evaluate_clusters(
     entity_id); classified (optional): pair table with match_type for
     review credit.
     """
-    merged = predictions.join(truth, id_col).cache()
+    # each table feeds several counts (and fp/fn are returned): lazy
+    # local checkpoints, freed with the DataFrames
+    merged = predictions.join(truth, id_col).localCheckpoint(eager=False)
 
-    true_pairs = pairs_from_clusters(merged, id_col, "entity_id").cache()
-    pred_pairs = pairs_from_clusters(merged, id_col, "predicted_entity_id").cache()
+    true_pairs = pairs_from_clusters(
+        merged, id_col, "entity_id"
+    ).localCheckpoint(eager=False)
+    pred_pairs = pairs_from_clusters(
+        merged, id_col, "predicted_entity_id"
+    ).localCheckpoint(eager=False)
 
     tp = pred_pairs.join(true_pairs, ["id_a", "id_b"], "left_semi")
-    fp_pairs = pred_pairs.join(true_pairs, ["id_a", "id_b"], "left_anti").cache()
-    fn_pairs = true_pairs.join(pred_pairs, ["id_a", "id_b"], "left_anti").cache()
+    fp_pairs = pred_pairs.join(
+        true_pairs, ["id_a", "id_b"], "left_anti"
+    ).localCheckpoint(eager=False)
+    fn_pairs = true_pairs.join(
+        pred_pairs, ["id_a", "id_b"], "left_anti"
+    ).localCheckpoint(eager=False)
 
     n_true = true_pairs.count()
     n_pred = pred_pairs.count()
@@ -151,7 +161,6 @@ def evaluate_labeled_pairs(
             "is_match",
             "match_type",
         )
-        .cache()
     )
     agg = labeled.agg(
         F.sum(((F.col("label") == 1) & (F.col("is_match") == 1)).cast("int")).alias("tp"),

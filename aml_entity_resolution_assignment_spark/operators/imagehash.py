@@ -114,17 +114,10 @@ def image_neardup(
     width = 64 // bands
     mask = (1 << width) - 1
     h = dhash_images(media).where(F.col("dhash").isNotNull())
-    # both self-join sides consume the hash table; without a persist
+    # both self-join sides consume the hash table; without a checkpoint
     # the MapInPandas decode subtree executes twice (the most
-    # expensive stage of the whole plan). Tracked in the shared
-    # release registry (candidates.release_persisted) like the
-    # minhash/simhash signature tables.
-    from pyspark import StorageLevel
-
-    from .candidates import _PERSISTED
-
-    h = h.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(h)
+    # expensive stage of the whole plan)
+    h = h.localCheckpoint(eager=False)
     slices = F.array(
         *[
             F.struct(

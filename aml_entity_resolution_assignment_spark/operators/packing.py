@@ -47,15 +47,11 @@ def _with_global_offsets(
     not — the cumsum in id order is well-defined wherever the cuts
     fall.
     """
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        _PERSISTED,
-    )
-
     d = docs.repartitionByRange(F.col(id_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
-    d = d.persist()
-    _PERSISTED.append(d)  # released via candidates.release_persisted()
+    # pin partition assignment between the two reads
+    d = d.localCheckpoint(eager=False)
     w = Window.partitionBy("_pid").orderBy(id_col)
     local = (F.sum(n_col).over(w) - F.col(n_col)).alias("_local")
     totals = sorted(
@@ -138,10 +134,6 @@ def pack_sequences(
     )
     if drop_last:
         out = out.where(F.col("n_tokens") == block_size)
-    # the prefix-sum input persisted inside _with_global_offsets stays
-    # cached until candidates.release_persisted()/persisted_scope()
-    # (shared registry): unpersisting before the caller materializes
-    # this plan would re-trigger the totals collect on recompute
     return out.select("block_id", "n_tokens", "tokens")
 
 

@@ -132,9 +132,6 @@ class StageRunner:
             [F.count(F.lit(1)).alias("rows"), *observe],
         )
         n = observed["rows"]
-        # stage output is on disk: intermediates cached inside lazy
-        # candidate plans (oversized-key tables) are no longer needed
-        candidates.release_persisted()
         wall = time.monotonic() - t0
         with open(mpath, "w") as f:
             json.dump(

@@ -34,8 +34,8 @@ _DEFAULTS = {
     # ~1.7x SLOWER than lz4 at both 4 and 16 cores — the host throttles
     # CPU, so zstd's extra cycles cost more than its bandwidth saving
     # here. On a real cluster (network-bound shuffle) zstd is usually
-    # the right trade: flip via SPARK_GRAFT_IO_CODEC or spark-submit.
-    "spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
+    # the right trade: pass it in get_spark's extra_conf or spark-submit.
+    "spark.io.compression.codec": "lz4",
     "spark.io.compression.zstd.level": "1",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",

@@ -623,7 +623,7 @@ def er_stream(
     cluster maintenance, so the live tables' contents become a
     deterministic function of event time, not arrival order. Pages
     with NULL warc_ts are never late (no event time to judge)."""
-    from ..operators.candidates import candidate_pairs, persisted_scope
+    from ..operators.candidates import candidate_pairs
     from ..operators.classify import classify
     from ..operators.cluster import (
         apply_cc_delta, connected_components, incremental_cc_delta,
@@ -662,28 +662,27 @@ def er_stream(
         keyed_new = add_blocking_keys(batch_df)
         corpus = read_resolve_corpus(spark, corpus_path, batch_id)
 
-        with persisted_scope():
-            pairs_nn = candidate_pairs(keyed_new)
-            if corpus is not None:
-                cand = find_candidates(keyed_new, corpus, limit=candidate_limit)
-                pairs_nc = cand.select(
-                    F.least("query_id", "candidate_id").alias("id_a"),
-                    F.greatest("query_id", "candidate_id").alias("id_b"),
-                )
-                pairs = pairs_nn.unionByName(pairs_nc).dropDuplicates(
-                    ["id_a", "id_b"]
-                )
-                lookup = corpus.unionByName(keyed_new)
-            else:
-                pairs = pairs_nn
-                lookup = keyed_new
-            classified = classify(pair_features(pairs, lookup), thresholds)
-            edges = classified.where(F.col("is_match") == 1).select(
-                "id_a", "id_b"
+        pairs_nn = candidate_pairs(keyed_new)
+        if corpus is not None:
+            cand = find_candidates(keyed_new, corpus, limit=candidate_limit)
+            pairs_nc = cand.select(
+                F.least("query_id", "candidate_id").alias("id_a"),
+                F.greatest("query_id", "candidate_id").alias("id_b"),
             )
-            edges.write.mode("overwrite").parquet(
-                f"{root}/matches/batch={batch_id}"
+            pairs = pairs_nn.unionByName(pairs_nc).dropDuplicates(
+                ["id_a", "id_b"]
             )
+            lookup = corpus.unionByName(keyed_new)
+        else:
+            pairs = pairs_nn
+            lookup = keyed_new
+        classified = classify(pair_features(pairs, lookup), thresholds)
+        edges = classified.where(F.col("is_match") == 1).select(
+            "id_a", "id_b"
+        )
+        edges.write.mode("overwrite").parquet(
+            f"{root}/matches/batch={batch_id}"
+        )
         edges = spark.read.parquet(f"{root}/matches/batch={batch_id}")
 
         prev = _read_assignments(spark, batch_id)
@@ -822,7 +821,7 @@ def dedup_gate_stream(
     verify, the same bounded LSH shape as the batch dedup operator."""
     from ..functions import minhash as mh
     from ..functions import similarity as sim
-    from ..operators.candidates import band_join_pairs, release_persisted
+    from ..operators.candidates import band_join_pairs
     from pyspark.sql.types import DoubleType
 
     bands, rows_per = mh.banding_for_threshold(threshold)
@@ -948,7 +947,6 @@ def dedup_gate_stream(
             )
         for df in persisted:
             df.unpersist()
-        release_persisted()
 
     return (
         docs_stream.writeStream.foreachBatch(_process)

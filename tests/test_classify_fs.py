@@ -35,7 +35,6 @@ def fs_classified(spark):
     feats = pair_features(pairs, keyed)
     out = classify.classify_fs(feats).persist()
     yield truth, out, keyed
-    candidates.release_persisted()
 
 
 def test_schema_composes_with_downstream(fs_classified):

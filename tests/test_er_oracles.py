@@ -9,9 +9,6 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
-from aml_entity_resolution_assignment_spark.operators.candidates import (
-    release_persisted,
-)
 from tools import check_oracles
 
 # the sf0.001 sibling of the oracle sweep's default data directory
@@ -41,10 +38,7 @@ def _canon(df):
 
 @pytest.mark.parametrize("name", NAMES)
 def test_er_core_query_matches_oracle(spark, con, name):
-    try:
-        got = _canon(entry.queries()[name](spark, SF).toPandas())
-    finally:
-        release_persisted()
+    got = _canon(entry.queries()[name](spark, SF).toPandas())
     want = _canon(con.execute(entry.oracle_sql()[name]).df())
     assert len(got) > 0
     assert list(got.columns) == list(want.columns)

@@ -176,18 +176,11 @@ def test_fit_params_matches_inline_em(spark):
 
 
 def test_pseudo_random_pairs_disjoint_and_deterministic(spark):
-    from aml_entity_resolution_assignment_spark.operators.candidates import (
-        release_persisted,
-    )
-
     recs = spark.createDataFrame([(f"u{i}",) for i in range(101)], "url string")
-    try:
-        p1 = sorted(map(tuple, FS.pseudo_random_pairs(recs, "url").collect()))
-        p2 = sorted(
-            map(tuple, FS.pseudo_random_pairs(recs.repartition(7), "url").collect())
-        )
-    finally:
-        release_persisted()
+    p1 = sorted(map(tuple, FS.pseudo_random_pairs(recs, "url").collect()))
+    p2 = sorted(
+        map(tuple, FS.pseudo_random_pairs(recs.repartition(7), "url").collect())
+    )
     assert p1 == p2  # deterministic + partitioning-invariant
     assert len(p1) == 50  # floor(N/2) pairs
     used = [x for ab in p1 for x in ab]

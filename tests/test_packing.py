@@ -184,9 +184,6 @@ class TestChunkDocuments:
 
 class TestShardByTokens:
     def test_balanced_and_deterministic(self, spark):
-        from aml_entity_resolution_assignment_spark.operators.candidates import (
-            release_persisted,
-        )
         from aml_entity_resolution_assignment_spark.operators.packing import (
             shard_by_tokens,
         )
@@ -195,7 +192,6 @@ class TestShardByTokens:
         rows = [(i, " ".join(["w"] * ((i * 37) % 100 + 1))) for i in range(200)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         out = shard_by_tokens(df, tokens_per_shard=500).collect()
-        release_persisted()
         by_doc = {r["doc_id"]: r for r in out}
         # offsets are the exclusive running sum in doc_id order
         acc = 0
@@ -215,9 +211,6 @@ class TestShardByTokens:
                 assert 400 <= n <= 600, (sid, n)
 
     def test_partitioning_invariant(self, spark):
-        from aml_entity_resolution_assignment_spark.operators.candidates import (
-            release_persisted,
-        )
         from aml_entity_resolution_assignment_spark.operators.packing import (
             shard_by_tokens,
         )
@@ -228,10 +221,8 @@ class TestShardByTokens:
             (r["doc_id"], r["token_start"], r["shard_id"])
             for r in shard_by_tokens(df.repartition(1), tokens_per_shard=50).collect()
         )
-        release_persisted()
         b = sorted(
             (r["doc_id"], r["token_start"], r["shard_id"])
             for r in shard_by_tokens(df.repartition(8), tokens_per_shard=50).collect()
         )
-        release_persisted()
         assert a == b

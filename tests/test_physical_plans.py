@@ -92,19 +92,17 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_self_join_sizes_aggregation_computed_once(spark, parquet_pages):
-    # the oversized-key table is persisted: the key-size aggregation
-    # shuffles once and every downstream broadcast build reads the
-    # cached (tiny) result instead of re-aggregating the key table
+    # the oversized-key table is a lazy local checkpoint: the key-size
+    # aggregation shuffles once, inside the checkpoint, and every
+    # downstream broadcast build scans its (tiny) blocks instead of
+    # re-aggregating the key table
     keyed = blocking.add_blocking_keys(spark.read.parquet(parquet_pages))
     recs = keyed.select(F.col("bk_host").alias("k"), "url")
     pairs = candidates.self_join_pairs(recs, "k", id_col="url", salt_cap=3)
     pairs.count()
     plan = pairs._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "InMemoryTableScan" in plan
-    # no eager pre-job: building the DataFrame plan must not have run
-    # any job (count above is the single action) — the salted plan is
-    # fully lazy, asserted by the cache scan feeding >= 2 consumers
-    assert plan.count("InMemoryTableScan") >= 2
+    assert "HashAggregate" not in plan
+    assert plan.count("Scan ExistingRDD") >= 2
 
 
 def test_resolve_plan_single_broadcast_and_shared_window_exchange(

@@ -4,13 +4,9 @@ clustering is trivial, (b) recall on genuinely clustered data under
 bounded clusters, (c) determinism / invariance, (d) plan shape."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from aml_entity_resolution_assignment_spark.operators import dedup as D
-from aml_entity_resolution_assignment_spark.operators.candidates import (
-    release_persisted,
-)
 
 
 def _clustered(spark, n=240, dim=16, groups=6, dup_every=4, seed=3):
@@ -44,12 +40,6 @@ def _exact_pairs(spark, df, t):
         .where(cosine_similarity_col(F.col("_va"), F.col("_vb")) >= t)
         .collect()
     }
-
-
-@pytest.fixture(autouse=True)
-def _release():
-    yield
-    release_persisted()
 
 
 def test_single_cluster_equals_exact_threshold(spark):
@@ -105,7 +95,6 @@ def test_partitioning_invariance_and_determinism(spark):
                 ).collect()
             }
         )
-        release_persisted()
     assert runs[0] == runs[1]
 
 
@@ -115,7 +104,6 @@ def test_max_cluster_caps_right_side(spark):
         df, n_clusters=4, min_cosine=0.95, sample=120, max_cluster=10
     )
     full = D.semdedup_pairs(df, n_clusters=4, min_cosine=0.95, sample=120)
-    release_persisted()
     assert capped.count() <= full.count()
     # capped pairs only lose id_b > cap-rank members, never gain
     cset = {(r["id_a"], r["id_b"]) for r in capped.collect()}

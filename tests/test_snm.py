@@ -6,9 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from aml_entity_resolution_assignment_spark.operators import blocking as B
-from aml_entity_resolution_assignment_spark.operators.candidates import (
-    release_persisted,
-)
 
 
 def _python_snm(rows, window):
@@ -20,12 +17,6 @@ def _python_snm(rows, window):
                 idb = srt[i + d][0]
                 out.add((min(ida, idb), max(ida, idb), d))
     return out
-
-
-@pytest.fixture(autouse=True)
-def _release():
-    yield
-    release_persisted()
 
 
 def test_matches_python_oracle(spark):

@@ -1,7 +1,8 @@
 """Driver-mimic correctness harness: run every queries() entry on Spark
 and its DuckDB oracle twin, compare rows/schema/values after column-name
 sort. Floats are rounded to 6 decimals BEFORE sorting/comparing so
-formatting jitter can't produce spurious mismatches.
+formatting jitter can't produce spurious mismatches. A query that leaves
+a cached plan in the session's CacheManager is a FAIL.
 
 Usage: python tools/check_oracles.py [--sf-dir DIR] [name ...]"""
 import os
@@ -33,6 +34,11 @@ def canon(df):
     return df
 
 
+def cache_is_empty(spark) -> bool:
+    """True when the session's CacheManager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def main() -> int:
     global SF
     argv = sys.argv[1:]
@@ -53,6 +59,13 @@ def main() -> int:
     for name in names:
         try:
             sdf = q[name](spark, SF).toPandas().sort_index(axis=1)
+            if not cache_is_empty(spark):
+                # a query must leave no cached plan behind; clear it so
+                # the next query starts from a clean session
+                spark.catalog.clearCache()
+                print(f"{name}: FAIL leaves cached plans in the CacheManager")
+                failed.append(name)
+                continue
             if name not in o:
                 print(f"{name}: rows-only ({len(sdf)} rows)")
                 continue
@@ -73,14 +86,6 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: ERROR {type(ex).__name__}: {ex}")
             failed.append(name)
-        finally:
-            # free tracked signature/oversized-key caches per query —
-            # same materialization-boundary contract as bench/pipeline
-            from aml_entity_resolution_assignment_spark.operators.candidates import (
-                release_persisted,
-            )
-
-            release_persisted()
     print("failed:", failed or "none")
     return 1 if failed else 0
 
