@@ -753,10 +753,16 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select("doc_id", "lang")
     a = d.select(F.col("doc_id").alias("id_a"), F.col("lang").alias("la"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("lang").alias("lb"))
+
+    def padded(c):
+        # zero-padded: string order is numeric order, so the min-id
+        # label is the numeric min member (9, not 10, for {9, 10})
+        return F.lpad(F.col(c).cast("string"), 20, "0").alias(c)
+
     edges = a.join(b, (F.col("id_b") == F.col("id_a") + 1) & (F.col("la") == F.col("lb"))).select(
-        F.col("id_a").cast("string"), F.col("id_b").cast("string")
+        padded("id_a"), padded("id_b")
     )
-    verts = d.select(F.col("doc_id").cast("string").alias("doc_id"))
+    verts = d.select(padded("doc_id"))
     out = G.connected_components(edges, vertices=verts, id_col="doc_id")
     return out.select(
         F.col("doc_id").cast("long"),

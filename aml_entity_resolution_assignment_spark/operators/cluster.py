@@ -1,15 +1,18 @@
-"""Transitive closure via iterative DataFrame connected components.
+"""Transitive closure via connected components.
 
 Reference: resolve_entities (/root/reference/src/matching.py:572-596)
-builds an in-memory networkx graph — impossible at 10^12 edges. Here:
-the alternating large-star/small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) expressed as
-pure DataFrame self-joins + groupBy().min(), converging in O(log n)
-rounds regardless of component diameter. Each round localCheckpoints to
-cut lineage (SURVEY.md §4 hard part 1).
+builds an in-memory networkx graph — impossible at 10^12 edges. Here
+the edge list is sized first: an edge set of at most DRIVER_CC_EDGES
+rows is collected and finished on the driver by one path-compressed
+union-find pass (the reference's in-memory choice, where it fits);
+above the cap, the alternating large-star/small-star algorithm
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14) runs as pure DataFrame self-joins + window mins, converging in
+O(log n) rounds regardless of component diameter. Each round
+localCheckpoints to cut lineage (SURVEY.md §4 hard part 1).
 
-Component labels are min(record_id) per component — deterministic,
-unlike the reference's enumeration-order ENT_{i} labels
+Component labels are min(record_id) per component on both paths —
+deterministic, unlike the reference's enumeration-order ENT_{i} labels
 (matching.py:590-591); evaluation is label-invariant (§2.8) so parity
 holds.
 
@@ -25,8 +28,13 @@ of depth-1 stars rooted at each component's minimum.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Edge sets up to this many rows finish on the driver (one union-find
+# pass); larger ones run the distributed star rounds.
+DRIVER_CC_EDGES = 200_000
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -108,16 +116,26 @@ def connected_components(
     Singletons (vertices without edges) keep themselves as their
     component (reference adds ALL nodes, matching.py:580).
 
-    `tune_shuffle_partitions` sizes the iterative shuffles to the
-    shrinking edge set by setting spark.sql.shuffle.partitions around
-    each round's job ONLY (set immediately before the collect, restored
-    immediately after — not across the loop body), because AQE with
-    parallelismFirst=true refuses to coalesce tiny shuffles and the
-    O(log n) tail otherwise pays fixed per-task cost x partitions x
-    stages. The conf is session-shared: a query on the SAME session that
-    happens to be planned during a round's job window would see the
-    shrunken value. Pass False when running CC concurrently with other
-    work on a shared session (streaming foreachBatch, parallel jobs).
+    Driver finish: the canonical edge list is probed with
+    limit(DRIVER_CC_EDGES + 1); when it holds at most DRIVER_CC_EDGES
+    rows, one union-find pass over the collected rows labels every
+    endpoint and the assignment comes back through Arrow — no star
+    rounds, no convergence jobs. Above the cap the distributed
+    large-star/small-star rounds run. Labels are identical on both
+    paths (min member id in binary string order, which Python `str`
+    order equals).
+
+    `tune_shuffle_partitions` applies to the distributed rounds only.
+    It sizes the iterative shuffles to the shrinking edge set by
+    setting spark.sql.shuffle.partitions around each round's job ONLY
+    (set immediately before the collect, restored immediately after —
+    not across the loop body), because AQE with parallelismFirst=true
+    refuses to coalesce tiny shuffles and the O(log n) tail otherwise
+    pays fixed per-task cost x partitions x stages. The conf is
+    session-shared: a query on the SAME session that happens to be
+    planned during a round's job window would see the shrunken value.
+    Pass False when running CC concurrently with other work on a
+    shared session (streaming foreachBatch, parallel jobs).
     """
     # canonical orientation: _symmetrize's no-dedup union relies on the
     # input never containing both (a,b) and (b,a) — least/greatest
@@ -126,9 +144,7 @@ def connected_components(
     # edge list, keyed (u,v) while round 1 re-shuffles by u anyway):
     # duplicate rows are harmless for one round — large-star's
     # window-min is duplicate-blind and small-star ends in a distinct,
-    # so every round-1 output onward is exact. Callers here pass
-    # match/threshold pairs that are unique by construction; a heavily
-    # duplicated input would only pay its duplicates through round 1.
+    # so every round-1 output onward is exact — and to union-find.
     e = (
         edges.select(
             F.least(
@@ -140,8 +156,44 @@ def connected_components(
         )
         .where(F.col("u") != F.col("v"))
     )
-
     spark = edges.sparkSession
+    # LAZY checkpoint: the probe materializes the partitions it reads
+    # (the take stops at cap + 1 rows), and round 1 reuses them when the
+    # graph is over the cap
+    cur = e.localCheckpoint(eager=False)  # any orientation
+    probe = cur.limit(DRIVER_CC_EDGES + 1).collect()
+    if len(probe) <= DRIVER_CC_EDGES:
+        # from pandas through Arrow: no Python RDD, no Python workers
+        assign = spark.createDataFrame(
+            pd.DataFrame(
+                _unionfind_relabel([(r["u"], r["v"]) for r in probe]),
+                columns=["member", "component"],
+            ),
+            "member string, component string",
+        )
+    else:
+        assign = _star_rounds(cur, max_iter, tune_shuffle_partitions)
+
+    if vertices is not None:
+        verts = (
+            vertices.select(F.col(id_col).cast("string").alias("member")).distinct()
+        )
+        assign = verts.join(assign, "member", "left").select(
+            "member", F.coalesce("component", "member").alias("component")
+        )
+    return assign.select(
+        F.col("member").alias(id_col),
+        F.col("component").alias("predicted_entity_id"),
+    )
+
+
+def _star_rounds(
+    cur: DataFrame, max_iter: int, tune_shuffle_partitions: bool
+) -> DataFrame:
+    """The distributed CC: alternating large-star/small-star rounds over
+    canonical (u, v) edges, one fused job per round, until the edge set
+    stops changing. Returns (member, component) for every endpoint."""
+    spark = cur.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
     orig_parts = spark.conf.get(conf_key)
     adaptive: int | None = None
@@ -161,11 +213,6 @@ def connected_components(
         finally:
             spark.conf.set(conf_key, orig_parts)
 
-    # LAZY checkpoint: round 1's convergence aggregate materializes it
-    # (the former eager checkpoint + isEmpty() pre-check were two extra
-    # jobs per CC call; an empty edge set now shows up as n == 0 in the
-    # first round's aggregate instead)
-    cur = e.localCheckpoint(eager=False)  # any orientation
     prev_sig: tuple | None = None
     for _ in range(max_iter):
         ls = _large_star(_symmetrize(cur))
@@ -211,9 +258,8 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    assign = ss
     # fixpoint: (child, parent=component root). Roots map to themselves.
-    assign = assign.select(
+    assign = ss.select(
         F.col("child").alias("member"), F.col("parent").alias("component")
     )
     roots = (
@@ -221,22 +267,10 @@ def connected_components(
         .distinct()
         .select("member", F.col("member").alias("component"))
     )
-    assign = (
+    return (
         assign.unionByName(roots)
         .groupBy("member")
         .agg(F.min("component").alias("component"))
-    )
-
-    if vertices is not None:
-        verts = (
-            vertices.select(F.col(id_col).cast("string").alias("member")).distinct()
-        )
-        assign = verts.join(assign, "member", "left").select(
-            "member", F.coalesce("component", "member").alias("component")
-        )
-    return assign.select(
-        F.col("member").alias(id_col),
-        F.col("component").alias("predicted_entity_id"),
     )
 
 
@@ -246,7 +280,6 @@ def incremental_connected_components(
     id_col: str = "url",
     label_col: str = "predicted_entity_id",
     max_iter: int = 50,
-    driver_cap: int = 200_000,
 ) -> DataFrame:
     """Fold a batch of NEW match edges into an existing component
     assignment WITHOUT re-running CC over the full graph — the
@@ -271,16 +304,16 @@ def incremental_connected_components(
     vertices first seen in `new_edges`)."""
     relabel, fresh = incremental_cc_delta(
         assignments, new_edges, id_col=id_col, label_col=label_col,
-        max_iter=max_iter, driver_cap=driver_cap,
+        max_iter=max_iter,
     )
     return apply_cc_delta(assignments, relabel, fresh, id_col, label_col)
 
 
 def _unionfind_relabel(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Driver-side connected components over a batch-bounded edge list:
+    """Driver-side connected components over a driver-sized edge list:
     (node, min-member-label) for EVERY node incident to `edges` — the
-    exact contract of connected_components(mapped, id_col=...), with the
-    same lexicographic (binary UTF-8 == code-point) string ordering.
+    exact (member, component) contract of _star_rounds, with the same
+    lexicographic (binary UTF-8 == code-point) string ordering.
     Path-compressed union-find; deterministic regardless of edge order
     because the final label is the global min per component."""
     parent: dict[str, str] = {}
@@ -315,7 +348,6 @@ def incremental_cc_delta(
     id_col: str = "url",
     label_col: str = "predicted_entity_id",
     max_iter: int = 50,
-    driver_cap: int = 200_000,
 ) -> tuple[DataFrame, DataFrame]:
     """The DELTA form of incremental CC — what a streaming maintainer
     persists per micro-batch instead of rewriting the whole assignment:
@@ -347,33 +379,14 @@ def incremental_cc_delta(
         .where(F.col("id_a") != F.col("id_b"))
     )
     # contracted component graph: bounded by the batch size — the SAME
-    # premise that already lets `relabel` broadcast below. When it is
-    # driver-sized (<= driver_cap distinct edges), a path-compressed
-    # union-find over the collected edge list replaces the distributed
-    # CC: ONE job instead of O(log n) convergence-checked rounds
-    # (measured ~10 jobs per call; guide §1.2 — the distributed
-    # algorithm only where the data needs it). Above the cap (or with
-    # driver_cap=0/None) the exact distributed form runs unchanged;
-    # labels are identical either way (min member id, same binary
-    # string ordering), pinned by the cc_incremental oracle.
-    local_edges = None
-    if driver_cap:
-        probe = mapped.distinct().limit(int(driver_cap) + 1).collect()
-        if len(probe) <= int(driver_cap):
-            local_edges = [(r["id_a"], r["id_b"]) for r in probe]
-    spark = assignments.sparkSession
-    if local_edges is not None:
-        relabel = spark.createDataFrame(
-            _unionfind_relabel(local_edges) or [],
-            "old_label string, new_label string",
-        )
-    else:
-        relabel = connected_components(
-            mapped, id_col="comp", max_iter=max_iter
-        ).select(
-            F.col("comp").alias("old_label"),
-            F.col("predicted_entity_id").alias("new_label"),
-        )
+    # premise that already lets `relabel` broadcast below, and the one
+    # that usually lets connected_components finish it on the driver
+    relabel = connected_components(
+        mapped, id_col="comp", max_iter=max_iter
+    ).select(
+        F.col("comp").alias("old_label"),
+        F.col("predicted_entity_id").alias("new_label"),
+    )
     # vertices first seen in this batch: the contracted graph's verdict
     # (or themselves, when every edge collapsed to a self-loop)
     new_verts = (
@@ -848,11 +861,13 @@ def hac_clusters(
     linkage >= threshold, and max/min/mean >= t each imply at least
     ONE cross pair >= t — so every final cluster is connected in the
     >= threshold graph, and records partition EXACTLY into its
-    connected components (O(log n) CC). The sequential merge loop then
-    runs independently per component inside one applyInPandas kernel
-    (Arrow-batched, no driver-side graph, parallel across components),
-    seeing ALL scored edges between component members (sub-threshold
-    ones included — complete/average linkage needs them); nodes with
+    connected components (connected_components: one driver union-find
+    pass up to DRIVER_CC_EDGES threshold edges, star rounds above). The
+    sequential merge loop then runs independently per component inside
+    one applyInPandas kernel (Arrow-batched, no driver-side graph,
+    parallel across components), seeing ALL scored edges between
+    component members (sub-threshold ones included — complete/average
+    linkage needs them); nodes with
     no >= threshold edge can never merge and short-circuit to
     singleton rows without touching the kernel. Threshold-graph
     components are far smaller than positive-graph components; one
@@ -882,7 +897,7 @@ def hac_clusters(
         .where((F.col("u") != F.col("v")) & (F.col("s") > 0.0))
         .groupBy("u", "v")
         .agg(F.max("s").alias("s"))
-        # lazy: the threshold-graph CC's first round materializes it
+        # lazy: the threshold-graph CC's edge probe materializes it
         .localCheckpoint(eager=False)
     )
     comp = connected_components(
@@ -1010,7 +1025,9 @@ def cluster_sweep(
     connected_components once, every looser level folds in only the
     newly-qualifying edge band via incremental_connected_components
     (contracted-graph merge, the big assignment never reshuffles).
-    Total cost = one CC + k-1 boundary-sized increments, vs k full CCs.
+    Total cost = one CC + k-1 boundary-sized increments, vs k full CCs;
+    each CC finishes on the driver while its edge set is at most
+    DRIVER_CC_EDGES rows.
 
     Returns one row per threshold: (threshold, n_edges, n_entities,
     n_singletons, largest_entity, n_records). Aggregates are

@@ -241,7 +241,7 @@ def dedup_keep_best(
     score_col: str,
 ) -> DataFrame:
     """Quality-aware transitive dedup: resolve near-dup pairs into
-    groups (same O(log n) CC operator) and keep each group's
+    groups (same connected_components operator) and keep each group's
     HIGHEST-`score_col` member (min id breaks ties) instead of the
     arbitrary min-id representative — the form a training-data
     pipeline actually wants ("of these near-duplicate crawls, keep the

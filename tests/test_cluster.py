@@ -5,15 +5,19 @@ import random
 import networkx as nx
 import pytest
 
+from aml_entity_resolution_assignment_spark.operators import cluster
 from aml_entity_resolution_assignment_spark.operators.cluster import (
     connected_components,
 )
 
 
 def _oracle(edges, vertices):
+    # connected_components drops self-loops and null endpoints
     g = nx.Graph()
     g.add_nodes_from(vertices)
-    g.add_edges_from(edges)
+    g.add_edges_from(
+        (a, b) for a, b in edges if a is not None and b is not None and a != b
+    )
     out = {}
     for comp in nx.connected_components(g):
         root = min(comp)
@@ -22,7 +26,13 @@ def _oracle(edges, vertices):
     return out
 
 
+def _labels(df, id_col="url"):
+    return {r[id_col]: r["predicted_entity_id"] for r in df.collect()}
+
+
 def _run(spark, edges, vertices=None):
+    """Labels from the driver finish (default DRIVER_CC_EDGES), checked
+    equal to the distributed star rounds (cap monkeypatched to 0)."""
     e_df = spark.createDataFrame(
         edges or [("x", "x")], "id_a string, id_b string"
     )
@@ -33,8 +43,12 @@ def _run(spark, edges, vertices=None):
         if vertices is not None
         else None
     )
-    got = connected_components(e_df, vertices=v_df)
-    return {r["url"]: r["predicted_entity_id"] for r in got.collect()}
+    via_driver = _labels(connected_components(e_df, vertices=v_df))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_CC_EDGES", 0)
+        via_rounds = _labels(connected_components(e_df, vertices=v_df))
+    assert via_driver == via_rounds
+    return via_driver
 
 
 def test_chain_transitivity(spark):
@@ -61,6 +75,56 @@ def test_singletons_kept(spark):
 def test_no_edges_all_singletons(spark):
     got = _run(spark, [], ["x", "y", "z"])
     assert got == {"x": "x", "y": "y", "z": "z"}
+    assert _run(spark, []) == {}
+
+
+# ids whose string order differs from their numeric, length or byte-naive
+# order: the label is the min in binary UTF-8 order on both paths
+ORDERING_TRAPS = [
+    [("9", "10"), ("10", "11"), ("100", "99"), ("2", "100")],
+    [("abc", "ab"), ("ab", "b"), ("a", "zz"), ("zzz", "a"), ("B", "b")],
+    [("é", "e"), ("e", "z"), ("日本", "中"), ("中", "\U0001F600"),
+     ("ÿ", "Ā"), ("Ā", "é")],
+]
+
+
+@pytest.mark.parametrize("edges", ORDERING_TRAPS, ids=["digits", "lengths", "utf8"])
+def test_ordering_traps_match_networkx(spark, edges):
+    verts = sorted({v for e in edges for v in e} | {"0", "á"})
+    assert _run(spark, edges, verts) == _oracle(edges, verts)
+    assert _run(spark, edges) == _oracle(edges, [])
+
+
+def test_messy_rows_match_networkx(spark):
+    """Duplicate rows, both orientations of an edge, self-loops and null
+    endpoints: both paths drop the self-loops and nulls, and neither
+    the duplicates nor the reversed copies change a label."""
+    edges = [
+        ("b", "a"), ("a", "b"), ("a", "b"), ("c", "b"), ("b", "c"),
+        ("d", "d"), ("e", "e"), ("e", "f"), ("f", "e"),
+        (None, "g"), ("h", None), (None, None), ("i", "i"),
+    ]
+    verts = ["a", "b", "c", "d", "e", "f", "g", "h", "x"]
+    assert _run(spark, edges, verts) == _oracle(edges, verts)
+    assert _run(spark, edges) == _oracle(edges, [])
+
+
+def test_small_graph_job_budget(spark):
+    """A 500-node chain finishes on the driver: the probe, the vertex
+    join and the collect, with no star rounds (the rounds take 55)."""
+    sc = spark.sparkContext
+    verts = [f"n{i:03d}" for i in range(500)]
+    e_df = spark.createDataFrame(
+        list(zip(verts, verts[1:])), "id_a string, id_b string"
+    )
+    v_df = spark.createDataFrame([(v,) for v in verts], "url string")
+    sc.setJobGroup("cc-budget", "500-node chain")
+    try:
+        got = _labels(connected_components(e_df, vertices=v_df))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(got.values()) == {"n000"} and len(got) == 500
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-budget")) <= 6
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -123,11 +187,10 @@ def test_incremental_cc_equals_full_recompute(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 19])
 def test_incremental_cc_driver_and_distributed_paths_agree(spark, seed):
-    """The batch-bounded contracted graph runs driver-side union-find
-    by default (driver_cap) and the exact distributed CC above the cap
-    (or with driver_cap=0): both paths must produce IDENTICAL labels
-    (min member id, binary string order). driver_cap=0 forces the
-    distributed branch; driver_cap large forces the union-find."""
+    """The batch-bounded contracted graph finishes on the driver by
+    default and runs the distributed star rounds above DRIVER_CC_EDGES
+    (monkeypatched to 0 here): both paths must produce IDENTICAL labels
+    (min member id, binary string order)."""
     from aml_entity_resolution_assignment_spark.operators.cluster import (
         incremental_connected_components,
     )
@@ -144,14 +207,10 @@ def test_incremental_cc_driver_and_distributed_paths_agree(spark, seed):
     vert_df = spark.createDataFrame([(v,) for v in verts], "url string")
 
     assignments = connected_components(base_df, vertices=vert_df, id_col="url")
-    via_driver = incremental_connected_components(
-        assignments, delta_df, driver_cap=1_000_000
-    )
-    via_dist = incremental_connected_components(
-        assignments, delta_df, driver_cap=0
-    )
-    d1 = {r["url"]: r["predicted_entity_id"] for r in via_driver.collect()}
-    d2 = {r["url"]: r["predicted_entity_id"] for r in via_dist.collect()}
+    d1 = _labels(incremental_connected_components(assignments, delta_df))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_CC_EDGES", 0)
+        d2 = _labels(incremental_connected_components(assignments, delta_df))
     assert d1 == d2
     all_verts = set(verts) | {v for e in delta for v in e}
     assert d1 == _oracle(base + delta, all_verts)

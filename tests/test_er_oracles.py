@@ -6,6 +6,7 @@ features, the F-S family or the clustering kernels fails here."""
 import os
 
 import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
@@ -16,8 +17,8 @@ SF = os.path.join(os.path.dirname(check_oracles.SF), "sf0.001")
 
 NAMES = [
     "candidate_pairs", "pair_features", "rule_cascade",
-    "cluster_cohesion", "hac_single", "cluster_sweep",
-    "fs_pr_curve",
+    "connected_components", "cluster_cohesion", "hac_single",
+    "cluster_sweep", "fs_pr_curve",
 ]
 
 
@@ -44,3 +45,27 @@ def test_er_core_query_matches_oracle(spark, con, name):
     assert list(got.columns) == list(want.columns)
     assert got.shape == want.shape
     assert (got.astype(str).values == want.astype(str).values).all()
+
+
+def test_connected_components_labels_numeric_min(spark, tmp_path):
+    """Ids that straddle a digit boundary inside one component ({9, 10},
+    {99, 100}): the label is the numeric min member, as in the oracle,
+    not the string min."""
+    docs = pd.DataFrame({
+        "doc_id": [8, 9, 10, 11, 99, 100],
+        "lang": ["en", "de", "de", "en", "fr", "fr"],
+    })
+    docs.to_parquet(tmp_path / "documents.parquet")
+    got = _canon(
+        entry.queries()["connected_components"](spark, str(tmp_path)).toPandas()
+    )
+    c = duckdb.connect()
+    c.register("documents", docs)
+    want = _canon(c.execute(entry.oracle_sql()["connected_components"]).df())
+    c.close()
+    assert list(got.columns) == list(want.columns)
+    assert got.shape == want.shape
+    assert (got.astype(str).values == want.astype(str).values).all()
+    assert dict(zip(want["doc_id"], want["component"])) == {
+        8: 8, 9: 9, 10: 9, 11: 11, 99: 99, 100: 99,
+    }
