@@ -28,6 +28,8 @@ of depth-1 stars rooted at each component's minimum.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -309,16 +311,22 @@ def incremental_connected_components(
     return apply_cc_delta(assignments, relabel, fresh, id_col, label_col)
 
 
-def _unionfind_relabel(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Driver-side connected components over a driver-sized edge list:
-    (node, min-member-label) for EVERY node incident to `edges` — the
-    exact (member, component) contract of _star_rounds, with the same
-    lexicographic (binary UTF-8 == code-point) string ordering.
-    Path-compressed union-find; deterministic regardless of edge order
-    because the final label is the global min per component."""
-    parent: dict[str, str] = {}
+class _UnionFind:
+    """Driver-side union-find over string nodes: path compression plus
+    union by size, with each root's component size kept for callers
+    that count (cluster_sweep)."""
 
-    def find(x: str) -> str:
+    def __init__(self) -> None:
+        self.parent: dict[str, str] = {}
+        self.size: dict[str, int] = {}
+
+    def add(self, x: str) -> None:
+        if x not in self.parent:
+            self.parent[x] = x
+            self.size[x] = 1
+
+    def find(self, x: str) -> str:
+        parent = self.parent
         root = x
         while parent[root] != root:
             root = parent[root]
@@ -326,20 +334,38 @@ def _unionfind_relabel(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
             parent[x], x = root, parent[x]
         return root
 
+    def union(self, a: str, b: str) -> tuple[int, int] | None:
+        """Join the components of two added nodes. Returns the sizes of
+        the two components merged, or None when they already were one."""
+        ra, rb = self.find(a), self.find(b)
+        if ra == rb:
+            return None
+        na, nb = self.size[ra], self.size[rb]
+        if na < nb:
+            ra, rb = rb, ra
+        self.parent[rb] = ra
+        self.size[ra] = na + nb
+        return na, nb
+
+
+def _unionfind_relabel(edges: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Driver-side connected components over a driver-sized edge list:
+    (node, min-member-label) for EVERY node incident to `edges` — the
+    exact (member, component) contract of _star_rounds, with the same
+    lexicographic (binary UTF-8 == code-point) string ordering.
+    Deterministic regardless of edge order because the final label is
+    the global min per component."""
+    uf = _UnionFind()
     for a, b in edges:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
+        uf.add(a)
+        uf.add(b)
+        uf.union(a, b)
     best: dict[str, str] = {}
-    for node in parent:
-        r = find(node)
+    for node in uf.parent:
+        r = uf.find(node)
         if r not in best or node < best[r]:
             best[r] = node
-    return [(node, best[find(node)]) for node in parent]
+    return [(node, best[uf.find(node)]) for node in uf.parent]
 
 
 def incremental_cc_delta(
@@ -1011,7 +1037,6 @@ def cluster_sweep(
     id_a: str = "id_a",
     id_b: str = "id_b",
     score_col: str = "score",
-    vertices: DataFrame | None = None,
     id_col: str = "url",
 ) -> DataFrame:
     """Match-threshold sweep: entity-count diagnostics at each
@@ -1021,38 +1046,102 @@ def cluster_sweep(
     knee before a mega-cluster forms.
 
     Exploits monotonicity instead of re-running CC per threshold:
-    thresholds are processed DESCENDING; the tightest level runs full
-    connected_components once, every looser level folds in only the
-    newly-qualifying edge band via incremental_connected_components
-    (contracted-graph merge, the big assignment never reshuffles).
-    Total cost = one CC + k-1 boundary-sized increments, vs k full CCs;
-    each CC finishes on the driver while its edge set is at most
-    DRIVER_CC_EDGES rows.
+    thresholds are processed DESCENDING and every looser level only
+    adds the newly-qualifying edge band. The edge list is probed with
+    limit(DRIVER_CC_EDGES + 1), as connected_components does. At most
+    DRIVER_CC_EDGES rows answer every level in one Kruskal-style
+    driver pass: edges sorted by score, descending, merge into one
+    size-tracking union-find, and each level's counts are read off as
+    its threshold is passed — no per-level Spark job. Above the cap the
+    tightest level runs full connected_components once and every
+    looser level folds in its band via incremental_connected_components
+    (contracted-graph merge, the big assignment never reshuffles), one
+    size aggregate per level.
 
     Returns one row per threshold: (threshold, n_edges, n_entities,
-    n_singletons, largest_entity, n_records). Aggregates are
-    collected per level (k driver rows — aggregate-sized, not data-
-    sized). `vertices` defaults to all endpoints of `scored_edges`
-    (unfiltered), so singleton counts are comparable across levels.
+    n_singletons, largest_entity, n_records). Records are all endpoints
+    of `scored_edges` (self-loops and null ids dropped, null-score
+    edges kept as endpoints), so singleton counts are comparable across
+    levels. An edge qualifies at threshold t when its score >= t in
+    Spark's double order (NaN above every number, null never).
     """
     if not thresholds:
         raise ValueError("cluster_sweep: need at least one threshold")
     levels = sorted(set(float(t) for t in thresholds), reverse=True)
 
-    e = scored_edges.select(
-        F.col(id_a).cast("string").alias("id_a"),
-        F.col(id_b).cast("string").alias("id_b"),
-        F.col(score_col).cast("double").alias("s"),
-    ).where(F.col("id_a") != F.col("id_b"))
-    if vertices is None:
-        vertices = (
-            e.select(F.col("id_a").alias(id_col))
-            .unionByName(e.select(F.col("id_b").alias(id_col)))
-            .distinct()
+    # lazy: the probe materializes it, and the distributed levels
+    # re-read it
+    e = (
+        scored_edges.select(
+            F.col(id_a).cast("string").alias("id_a"),
+            F.col(id_b).cast("string").alias("id_b"),
+            F.col(score_col).cast("double").alias("s"),
         )
-    # lazy: the first level's CC round materializes it
-    e = e.localCheckpoint(eager=False)
+        .where(F.col("id_a") != F.col("id_b"))
+        .localCheckpoint(eager=False)
+    )
+    probe = e.limit(DRIVER_CC_EDGES + 1).collect()
+    if len(probe) <= DRIVER_CC_EDGES:
+        rows = _sweep_on_driver(probe, levels)
+    else:
+        rows = _sweep_levels(e, levels, id_col)
+    return scored_edges.sparkSession.createDataFrame(
+        rows,
+        "threshold double, n_edges long, n_entities long, "
+        "n_singletons long, largest_entity long, n_records long",
+    )
 
+
+def _spark_double_key(x: float) -> tuple[int, float]:
+    """Sort key with Spark's double order: NaN above every number
+    (Python's NaN comparisons are all false)."""
+    return (1, 0.0) if math.isnan(x) else (0, x)
+
+
+def _sweep_on_driver(edges: list, levels: list[float]) -> list[tuple]:
+    """cluster_sweep rows from collected (id_a, id_b, s) edges: one
+    size-tracking union-find, edges merged in descending score order."""
+    uf = _UnionFind()
+    for a, b, _ in edges:
+        uf.add(a)
+        uf.add(b)
+    n_records = len(uf.parent)
+    scored = sorted(
+        ((_spark_double_key(s), a, b) for a, b, s in edges if s is not None),
+        reverse=True,
+    )
+    n_entities = n_singletons = n_records
+    largest = 1
+    n_edges = 0
+    rows = []
+    for t in levels:
+        kt = _spark_double_key(t)
+        while n_edges < len(scored) and scored[n_edges][0] >= kt:
+            merged = uf.union(scored[n_edges][1], scored[n_edges][2])
+            n_edges += 1
+            if merged:
+                na, nb = merged
+                n_entities -= 1
+                n_singletons -= (na == 1) + (nb == 1)
+                largest = max(largest, na + nb)
+        if n_records:
+            rows.append(
+                (t, n_edges, n_entities, n_singletons, largest, n_records)
+            )
+        else:
+            # SQL sum/max over zero entities are NULL (distributed path)
+            rows.append((t, 0, 0, None, None, None))
+    return rows
+
+
+def _sweep_levels(e: DataFrame, levels: list[float], id_col: str) -> list[tuple]:
+    """cluster_sweep rows for an edge list above DRIVER_CC_EDGES: one CC
+    at the tightest level, incremental merges below it."""
+    vertices = (
+        e.select(F.col("id_a").alias(id_col))
+        .unionByName(e.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
     rows = []
     assign = None
     prev_t = None
@@ -1066,8 +1155,7 @@ def cluster_sweep(
             assign = incremental_connected_components(
                 assign, band, id_col=id_col
             )
-        # LAZY checkpoint + ONE fused job per level (was 3: eager
-        # checkpoint, edge count, size aggregate): the crossJoin of the
+        # LAZY checkpoint + ONE fused job per level: the crossJoin of the
         # two 1-row aggregates materializes the level's assignment and
         # scans the checkpointed edge table in the same action
         assign = assign.localCheckpoint(eager=False)
@@ -1099,11 +1187,7 @@ def cluster_sweep(
                 agg["n_records"],
             )
         )
-    return scored_edges.sparkSession.createDataFrame(
-        rows,
-        "threshold double, n_edges long, n_entities long, "
-        "n_singletons long, largest_entity long, n_records long",
-    )
+    return rows
 
 
 def canopies(

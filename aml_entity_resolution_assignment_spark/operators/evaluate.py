@@ -1,11 +1,14 @@
 """Pairwise evaluation: precision / recall / F1, label-invariant.
 
 Reference: evaluate_results (/root/reference/src/matching.py:598-679).
-Pairs-from-clusters (E2) is the within-label self-join; TP/FP/FN set
-algebra (E3) becomes left_semi / left_anti joins; review credit (E4)
-intersects FN with review pairs using least/greatest orientation
-normalization instead of the reference's dual-insert
-(matching.py:628-635).
+Pairs-from-clusters (E2) is the within-label self-join. The TP/FP/FN
+counts (E3) come from group sizes instead of pair sets: one aggregate
+action over the (predicted, true) contingency table sums C(n, 2) per
+predicted cluster, per true cluster and per cell. The FN/FP pair
+tables are returned as lazy left_anti joins of the E2 pairs, run only
+by a caller that reads them. Review credit (E4) intersects FN with
+review pairs using least/greatest orientation normalization instead of
+the reference's dual-insert (matching.py:628-635).
 """
 
 from __future__ import annotations
@@ -79,31 +82,50 @@ def evaluate_clusters(
     predictions: (id_col, predicted_entity_id); truth: (id_col,
     entity_id); classified (optional): pair table with match_type for
     review credit.
+
+    The counts are one Spark action: per joined id, then a cube over
+    (predicted, true) labels — true_pairs = Σ C(n_t, 2), pred_pairs =
+    Σ C(n_p, 2), tp = Σ C(n_pt, 2); a null label forms no pairs. An id
+    that appears more than once after the join raises ValueError. The
+    returned pair frames are lazy.
     """
-    # each table feeds several counts (and fp/fn are returned): lazy
-    # local checkpoints, freed with the DataFrames
-    merged = predictions.join(truth, id_col).localCheckpoint(eager=False)
+    merged = predictions.join(truth, id_col)
+    by_id = merged.groupBy(id_col).agg(
+        F.count("*").alias("_n_id"),
+        F.first("predicted_entity_id").alias("_p"),
+        F.first("entity_id").alias("_t"),
+    )
+    # grouping_id: 0 = (p, t) cell, 1 = per p, 2 = per t, 3 = total
+    cells = by_id.cube("_p", "_t").agg(
+        F.grouping_id().alias("_g"),
+        F.count("*").alias("_n"),
+        F.max("_n_id").alias("_max_n_id"),
+    )
+    n_pairs = F.expr("_n * (_n - 1) div 2")
+    g = F.col("_g")
+    p_ok, t_ok = F.col("_p").isNotNull(), F.col("_t").isNotNull()
+    row = cells.agg(
+        F.sum(F.when((g == 2) & t_ok, n_pairs)).alias("true_pairs"),
+        F.sum(F.when((g == 1) & p_ok, n_pairs)).alias("pred_pairs"),
+        F.sum(F.when((g == 0) & p_ok & t_ok, n_pairs)).alias("tp"),
+        F.max("_max_n_id").alias("max_rows_per_id"),
+    ).collect()[0]
+    if (row["max_rows_per_id"] or 0) > 1:
+        raise ValueError(
+            f"evaluate_clusters: a {id_col} value appears "
+            f"{row['max_rows_per_id']} times after the predictions/truth "
+            "join; each id needs exactly one predicted and one true label"
+        )
+    n_true = row["true_pairs"] or 0
+    n_pred = row["pred_pairs"] or 0
+    n_tp = row["tp"] or 0
+    n_fp = n_pred - n_tp
+    n_fn = n_true - n_tp
 
-    true_pairs = pairs_from_clusters(
-        merged, id_col, "entity_id"
-    ).localCheckpoint(eager=False)
-    pred_pairs = pairs_from_clusters(
-        merged, id_col, "predicted_entity_id"
-    ).localCheckpoint(eager=False)
-
-    tp = pred_pairs.join(true_pairs, ["id_a", "id_b"], "left_semi")
-    fp_pairs = pred_pairs.join(
-        true_pairs, ["id_a", "id_b"], "left_anti"
-    ).localCheckpoint(eager=False)
-    fn_pairs = true_pairs.join(
-        pred_pairs, ["id_a", "id_b"], "left_anti"
-    ).localCheckpoint(eager=False)
-
-    n_true = true_pairs.count()
-    n_pred = pred_pairs.count()
-    n_tp = tp.count()
-    n_fp = fp_pairs.count()
-    n_fn = fn_pairs.count()
+    true_pairs = pairs_from_clusters(merged, id_col, "entity_id")
+    pred_pairs = pairs_from_clusters(merged, id_col, "predicted_entity_id")
+    fp_pairs = pred_pairs.join(true_pairs, ["id_a", "id_b"], "left_anti")
+    fn_pairs = true_pairs.join(pred_pairs, ["id_a", "id_b"], "left_anti")
 
     caught = 0
     if classified is not None:

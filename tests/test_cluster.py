@@ -1,5 +1,6 @@
 """Connected components vs networkx oracle (FIXTURES.md §4)."""
 
+import math
 import random
 
 import networkx as nx
@@ -595,11 +596,53 @@ def test_canopies_tight_below_loose_raises(spark):
         canopies(df, loose=0.6, tight=0.3)
 
 
-def test_cluster_sweep_matches_per_threshold_cc(spark):
-    from aml_entity_resolution_assignment_spark.operators.cluster import (
-        cluster_sweep,
-    )
+def _sweep_rows(df, ths):
+    return {r.threshold: tuple(r) for r in cluster.cluster_sweep(df, ths).collect()}
 
+
+def _sweep_both(df, ths):
+    """Sweep rows from the driver pass (default DRIVER_CC_EDGES), checked
+    equal to the distributed levels (cap monkeypatched to 0)."""
+    via_driver = _sweep_rows(df, ths)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_CC_EDGES", 0)
+        via_levels = _sweep_rows(df, ths)
+    assert via_driver == via_levels
+    return via_driver
+
+
+def _sweep_oracle(edges, ths):
+    """cluster_sweep rows from networkx, with Spark's predicate
+    semantics: self-loops and null ids dropped, a null score never
+    qualifies, a NaN score qualifies at every threshold (Spark orders
+    NaN above every double)."""
+    kept = [
+        (a, b, s) for a, b, s in edges
+        if a is not None and b is not None and a != b
+    ]
+    verts = {x for a, b, _ in kept for x in (a, b)}
+    out = {}
+    for t in ths:
+        q = [
+            (a, b) for a, b, s in kept
+            if s is not None and (math.isnan(s) or s >= t)
+        ]
+        g = nx.Graph()
+        g.add_nodes_from(verts)
+        g.add_edges_from(q)
+        comps = list(nx.connected_components(g))
+        out[t] = (
+            t,
+            len(q),
+            len(comps),
+            sum(1 for c in comps if len(c) == 1) if verts else None,
+            max((len(c) for c in comps), default=None),
+            len(verts) or None,
+        )
+    return out
+
+
+def test_cluster_sweep_matches_per_threshold_cc(spark):
     rng = random.Random(9)
     pairs = []
     seen = set()
@@ -611,22 +654,81 @@ def test_cluster_sweep_matches_per_threshold_cc(spark):
         pairs.append((f"v{a:02d}", f"v{b:02d}", round(rng.random(), 3)))
     df = spark.createDataFrame(pairs, "id_a string, id_b string, score double")
     ths = [0.8, 0.5, 0.3]
-    out = {r.threshold: r for r in cluster_sweep(df, ths).collect()}
-    verts = sorted({x for p in pairs for x in p[:2]})
-    for t in ths:
-        g = nx.Graph()
-        g.add_nodes_from(verts)
-        g.add_edges_from((a, b) for a, b, s in pairs if s >= t)
-        comps = list(nx.connected_components(g))
-        r = out[t]
-        assert r.n_edges == sum(1 for _, _, s in pairs if s >= t)
-        assert r.n_entities == len(comps)
-        assert r.n_singletons == sum(1 for c in comps if len(c) == 1)
-        assert r.largest_entity == max(len(c) for c in comps)
-        assert r.n_records == len(verts)
+    out = _sweep_both(df, ths)
+    assert out == _sweep_oracle(pairs, ths)
     # monotone: entity count non-increasing as threshold drops
-    ordered = [out[t].n_entities for t in sorted(ths, reverse=True)]
+    ordered = [out[t][2] for t in sorted(ths, reverse=True)]
     assert ordered == sorted(ordered, reverse=True)
+
+
+NAN = float("nan")
+SWEEP_GRAPHS = {
+    # scores exactly equal to a threshold qualify at it
+    "ties": [
+        ("a", "b", 0.5), ("b", "c", 0.25), ("c", "d", 0.25),
+        ("e", "f", 0.75), ("f", "g", 0.5), ("h", "i", 0.1),
+    ],
+    # null scores never qualify but their endpoints are records; NaN
+    # qualifies at every threshold in Spark
+    "null_nan": [
+        ("a", "b", None), ("b", "c", NAN), ("c", "d", 0.6),
+        ("e", "f", NAN), ("g", "h", None), ("h", "i", 0.3),
+    ],
+    # duplicate rows, both orientations, self-loops, null ids
+    "messy": [
+        ("a", "b", 0.9), ("a", "b", 0.9), ("b", "a", 0.4), ("c", "b", 0.6),
+        ("b", "c", 0.2), ("d", "d", 0.9), ("e", "e", 0.8), ("e", "f", 0.5),
+        (None, "g", 0.9), ("h", None, 0.9), ("i", "j", 0.1),
+    ],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("name", list(SWEEP_GRAPHS))
+def test_cluster_sweep_edge_cases_match_networkx(spark, name):
+    """Both sweep paths equal networkx on the predicate traps, with a
+    threshold above every score (2.0) in every sweep."""
+    edges = SWEEP_GRAPHS[name]
+    df = spark.createDataFrame(
+        edges or [("x", "y", 1.0)], "id_a string, id_b string, score double"
+    )
+    if not edges:
+        df = df.limit(0)
+    ths = [2.0, 0.75, 0.5, 0.25]
+    assert _sweep_both(df, ths) == _sweep_oracle(edges, ths)
+
+
+def test_cluster_sweep_partitioning_invariant(spark):
+    rng = random.Random(17)
+    pairs = [
+        (f"v{rng.randrange(50):02d}", f"v{rng.randrange(50):02d}",
+         round(rng.random(), 2))
+        for _ in range(80)
+    ]
+    df = spark.createDataFrame(pairs, "id_a string, id_b string, score double")
+    ths = [0.9, 0.6, 0.3]
+    one = _sweep_both(df.repartition(1), ths)
+    assert _sweep_both(df.repartition(8), ths) == one
+    assert one == _sweep_oracle(pairs, ths)
+
+
+def test_cluster_sweep_job_budget(spark):
+    """A 500-edge sweep over 4 levels finishes on the driver: the edge
+    probe and the result collect, no per-level jobs."""
+    sc = spark.sparkContext
+    verts = [f"n{i:03d}" for i in range(501)]
+    df = spark.createDataFrame(
+        [(a, b, (i % 100) / 100) for i, (a, b) in enumerate(zip(verts, verts[1:]))],
+        "id_a string, id_b string, score double",
+    )
+    ths = [0.8, 0.6, 0.4, 0.2]
+    sc.setJobGroup("sweep-budget", "500-edge sweep")
+    try:
+        got = _sweep_rows(df, ths)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got[0.2][1] == 400 and got[0.2][5] == 501
+    assert len(sc.statusTracker().getJobIdsForGroup("sweep-budget")) <= 4
 
 
 def test_cluster_sweep_empty_thresholds_raises(spark):

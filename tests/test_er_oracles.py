@@ -18,7 +18,7 @@ SF = os.path.join(os.path.dirname(check_oracles.SF), "sf0.001")
 NAMES = [
     "candidate_pairs", "pair_features", "rule_cascade",
     "connected_components", "cluster_cohesion", "hac_single",
-    "cluster_sweep", "fs_pr_curve",
+    "cluster_sweep", "fs_pr_curve", "eval_prf",
 ]
 
 
