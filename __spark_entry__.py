@@ -57,8 +57,12 @@ from aml_entity_resolution_assignment_spark.operators import (
 # ---------------------------------------------------------------------------
 
 
+# declared, so a read starts no schema-inference job
+_DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(_DOCS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,6 +155,13 @@ def q_norm_address(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", N.norm_address(raw).alias("norm_addr"))
 
 
+def _bk_lang_size():
+    """blocking key: language + 100-char length bucket."""
+    return F.concat_ws(
+        "|", "lang", (F.col("n_chars") / 100).cast("int").cast("string")
+    )
+
+
 def q_blocking_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1-B5 analog: derive blocking keys over documents."""
     d = _docs(spark, sf_dir)
@@ -158,9 +169,7 @@ def q_blocking_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         _doc_key(F.col("text")).alias("bk_prefix"),
         F.when(F.length("source") > 2, F.col("source")).alias("bk_source"),
-        F.concat_ws("|", "lang", (F.col("n_chars") / 100).cast("int").cast("string")).alias(
-            "bk_lang_size"
-        ),
+        _bk_lang_size().alias("bk_lang_size"),
     )
 
 
@@ -1618,12 +1627,14 @@ def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1-E5: full pairwise evaluation (precision/recall/F1) between
     predicted clusters (bk_lang_size blocks) and truth (source)."""
-    d = q_blocking_keys(spark, sf_dir).join(
-        _docs(spark, sf_dir).select("doc_id", "source"), "doc_id"
+    d = _docs(spark, sf_dir).select(
+        "doc_id",
+        _bk_lang_size().alias("predicted_entity_id"),
+        F.col("source").alias("entity_id"),
     )
     m = E.evaluate_clusters(
-        d.select("doc_id", F.col("bk_lang_size").alias("predicted_entity_id")),
-        d.select("doc_id", F.col("source").alias("entity_id")),
+        d.select("doc_id", "predicted_entity_id"),
+        d.select("doc_id", "entity_id"),
         id_col="doc_id",
     )[0]
     return spark.createDataFrame(

@@ -1,4 +1,4 @@
-"""Candidate-pair generation: salted blocked self-joins + LSH band joins.
+"""Candidate-pair generation: grouped block emission + LSH band joins.
 
 Reference semantics (/root/reference/src/matching.py:78-184):
   * per-key exact self-join with id_a < id_b (matching.py:141-167)
@@ -7,18 +7,24 @@ Reference semantics (/root/reference/src/matching.py:78-184):
     Catalyst into BroadcastNestedLoopJoin; see matching.py:136-139 for
     the reference's identical reasoning against OR)
   * LSH approximate self-join (matching.py:88-133) — here the pickled
-    datasketch index becomes explode(bands) + equi-self-join on the
+    datasketch index becomes explode(bands) + block emission per
     band hash; identical candidate semantics (b=16, r=8 ≈ threshold
     0.7), fully distributed
 
-Scale machinery (north_rule: explicit skew handling):
-  * block-size capping — blocks larger than `drop_cap` are dropped with
-    a counter (the reference only WARNS at >50, matching.py:71-74; at
-    10^12 docs a stop-word block would be quadratic death)
-  * salted self-join — blocks above `salt_cap` are split into a
-    triangular (i <= j) salt grid so one hot key becomes S sub-join
-    tasks on composite keys (bk, i, j) instead of one straggler
-  * per-key repartition on the blocking key before the join
+Grouped block emission (SparkER's block index, block -> member list):
+the records are never self-joined. One aggregate groups the (key, id)
+table by key into blocks (count, sorted id list), and pairs are
+generated from each block's list:
+  * block-size capping — blocks larger than `drop_cap` are dropped
+    (the reference only WARNS at >50, matching.py:71-74; at 10^12 docs
+    a stop-word block would be quadratic death)
+  * blocks of at most `salt_cap` records emit their pairs where the
+    grouping left them: posexplode over the sorted ids, then explode
+    of the ids after each position (codegen'd generators)
+  * larger blocks are split into a triangular (i <= j) grid of salt
+    chunks, so one hot key becomes S*(S+1)/2 units (bk, i, j); only
+    these units are repartitioned, so a hot key spreads over many
+    tasks instead of one straggler
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_CAP = 2000  # block size above which the self-join is salted
+DEFAULT_SALT_CAP = 2000  # block size above which the block is salted
 DEFAULT_DROP_CAP = 200_000  # block size above which the block is dropped
 
 
@@ -48,6 +54,21 @@ def _pair_cols(l_id: str = "l_id", r_id: str = "r_id"):
     ]
 
 
+def _emit(units: DataFrame) -> DataFrame:
+    """Pairs of each unit row (l, r, i, j). A diagonal unit (i == j) has
+    r == l, sorted: each id pairs with the ids after it. An off-diagonal
+    unit pairs every id of l with every id of r. Two generators
+    (posexplode, then explode of a slice), no join and no lambda per
+    pair; equal ids (duplicate rows) never pair."""
+    start = F.when(F.col("i") == F.col("j"), F.col("p") + 2).otherwise(1)
+    return (
+        units.select("r", "i", "j", F.posexplode("l").alias("p", "a"))
+        .select("a", F.explode(F.slice("r", start, F.size("r"))).alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .select(*_pair_cols("a", "b"))
+    )
+
+
 def self_join_pairs(
     df: DataFrame,
     key: str,
@@ -55,88 +76,73 @@ def self_join_pairs(
     salt_cap: int = DEFAULT_SALT_CAP,
     drop_cap: int = DEFAULT_DROP_CAP,
 ) -> DataFrame:
-    """Unordered unique pairs (id_a < id_b) of records sharing `key`.
+    """Unordered pairs (id_a < id_b) of records sharing `key`, one row
+    per pair of rows: duplicate (key, id) rows repeat their pairs, null
+    keys and null ids never pair.
 
-    Small blocks take the plain equi-self-join (Catalyst shuffle/
-    sort-merge on the key, AQE skew split on top). Blocks larger than
-    `salt_cap` are exploded over a triangular salt grid so the shuffle
-    key becomes (key, i, j) — S*(S+1)/2 balanced tasks per hot block
-    instead of one quadratic straggler. Blocks over `drop_cap` are
-    excluded entirely (stop-word keys).
+    Grouped block emission: ONE aggregate groups the (key, id) table by
+    key into blocks (count, sorted id list); the records are never
+    self-joined. Blocks over `drop_cap` records are dropped (stop-word
+    keys). Blocks of at most `salt_cap` records emit their pairs where
+    the grouping left them. A larger block splits into
+    s = ceil(cnt / salt_cap) chunks by pmod(xxhash64(id), s); its
+    triangular (i <= j) grid of chunk pairs becomes s*(s+1)/2 units
+    (key, i, j), and only these units are repartitioned, so one hot key
+    spreads over many tasks instead of one quadratic straggler. Both
+    branches read the one grouping exchange.
     """
-    recs = df.where(F.col(key).isNotNull()).select(
-        F.col(key).alias("bk"), F.col(id_col).alias("rid")
-    )
-
-    # The hot/cold split never branches on data — no pre-job to test
-    # for hot keys (at 10^12 rows that test is a full extra pass). The
-    # oversized-key table is tiny by construction (every row represents
-    # > salt_cap records), so it broadcasts; when no key is hot, the
-    # anti-join is against an empty broadcast (near-free) and AQE
-    # collapses the empty hot-pair branch at runtime. `oversized` is a
-    # lazy local checkpoint so the key-size aggregation shuffles ONCE
-    # and its tiny result feeds all three broadcast builds (Catalyst
-    # does not reuse an exchange nested under distinct broadcast
-    # stages); its blocks die with the plans that hold it. Under AQE
-    # building the checkpoint already runs that shuffle's map stage;
-    # the action reuses its output, so it is not an extra pass.
-    sizes = recs.groupBy("bk").agg(F.count("*").alias("cnt"))
-    oversized = sizes.where(F.col("cnt") > salt_cap).localCheckpoint(
-        eager=False
-    )
-
-    hot_keys = oversized.where(F.col("cnt") <= drop_cap).select(
-        "bk", F.ceil(F.col("cnt") / salt_cap).cast("int").alias("n_salt")
-    )
-    cold = recs.join(F.broadcast(oversized.select("bk")), "bk", "left_anti")
-
-    cold_pairs = (
-        cold.alias("l")
-        .join(
-            cold.alias("r"),
-            F.col("l.bk") == F.col("r.bk"),
+    blocks = (
+        df.where(F.col(key).isNotNull())
+        .groupBy(F.col(key).alias("bk"))
+        .agg(
+            F.count("*").alias("cnt"),
+            F.sort_array(F.collect_list(F.col(id_col))).alias("ids"),
         )
-        .where(F.col("l.rid") < F.col("r.rid"))
-        .select(F.col("l.rid").alias("id_a"), F.col("r.rid").alias("id_b"))
+        .where((F.col("cnt") <= drop_cap) & (F.size("ids") > 1))
+    )
+    cold = blocks.where(F.col("cnt") <= salt_cap).select(
+        F.col("ids").alias("l"),
+        F.col("ids").alias("r"),
+        F.lit(0).alias("i"),
+        F.lit(0).alias("j"),
     )
 
-    hot = recs.join(F.broadcast(hot_keys), "bk").select(
-        "bk",
-        "rid",
-        F.pmod(F.xxhash64("rid"), F.col("n_salt")).cast("int").alias("salt"),
-        "n_salt",
-    )
-    # triangular grid (i <= j) per hot key
-    grid = hot_keys.select(
-        "bk",
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(0, n_salt - 1), "
-                "i -> transform(sequence(i, n_salt - 1), j -> struct(i, j))))"
-            )
-        ).alias("ij"),
-    ).select("bk", F.col("ij.i").alias("i"), F.col("ij.j").alias("j"))
-
-    left = hot.join(F.broadcast(grid), ["bk"]).where(F.col("salt") == F.col("i"))
-    right = hot.select(
-        F.col("bk").alias("bk_r"), F.col("rid").alias("rid_r"), F.col("salt").alias("salt_r")
-    )
-    hot_pairs = (
-        left.join(
-            right,
-            (F.col("bk") == F.col("bk_r")) & (F.col("j") == F.col("salt_r")),
-        )
-        .where(
-            (F.col("i") < F.col("j"))
-            | ((F.col("i") == F.col("j")) & (F.col("rid") < F.col("rid_r")))
+    # hot blocks: chunk c holds the ids with pmod(xxhash64(id), s) == c,
+    # built once per block; one unit per (i <= j) cell of the chunk grid
+    s = F.col("s")
+    hot = (
+        blocks.where(F.col("cnt") > salt_cap)
+        .select("bk", "ids", F.ceil(F.col("cnt") / salt_cap).cast("int").alias("s"))
+        .select(
+            "bk",
+            "s",
+            F.transform(
+                F.sequence(F.lit(0), s - 1),
+                lambda c: F.filter("ids", lambda x: F.pmod(F.xxhash64(x), s) == c),
+            ).alias("chunks"),
         )
         .select(
-            F.least("rid", "rid_r").alias("id_a"),
-            F.greatest("rid", "rid_r").alias("id_b"),
+            "bk",
+            "chunks",
+            F.explode(
+                F.expr(
+                    "flatten(transform(sequence(0, s - 1), "
+                    "i -> transform(sequence(i, s - 1), j -> struct(i, j))))"
+                )
+            ).alias("u"),
         )
-        .where(F.col("id_a") != F.col("id_b"))
+        .select(
+            "bk",
+            F.element_at("chunks", F.col("u.i") + 1).alias("l"),
+            F.element_at("chunks", F.col("u.j") + 1).alias("r"),
+            "u.i",
+            "u.j",
+        )
+        .repartition(
+            df.sparkSession.sparkContext.defaultParallelism, "bk", "i", "j"
+        )
     )
-    return cold_pairs.unionByName(hot_pairs)
+    return _emit(cold).unionByName(_emit(hot.drop("bk")))
 
 
 def band_join_pairs(
@@ -147,9 +153,9 @@ def band_join_pairs(
     drop_cap: int = DEFAULT_DROP_CAP,
 ) -> DataFrame:
     """LSH approximate self-join (J1): explode the band-hash array and
-    self-join per (band_idx, band_hash) bucket. Band index is baked into
-    the hash (functions/minhash.py), so one explode + the generic salted
-    self-join covers it. Pairs sharing multiple bands are deduped."""
+    pair the records of each (band_idx, band_hash) bucket. Band index is
+    baked into the hash (functions/minhash.py), so one explode + the
+    generic block emission covers it. Pairs sharing multiple bands are deduped."""
     exploded = df.where(F.col(band_col).isNotNull()).select(
         F.col(id_col), F.explode(F.col(band_col)).alias("band")
     )
@@ -174,8 +180,9 @@ def candidate_pairs(
     B-trees, wasteful for Spark: N shuffles + N size-scans), all keys
     collapse into ONE tall (rid, key_hash) table — key_hash = xxhash64
     of (key name, key value), so different key spaces cannot collide —
-    followed by ONE salted self-join and ONE global dedup: 3 shuffles
-    total regardless of how many blocking keys exist. A hash collision
+    followed by ONE grouped block emission and ONE global dedup: the
+    grouping shuffle, the hot-unit repartition and the dedup shuffle,
+    regardless of how many blocking keys exist. A hash collision
     between key spaces could only create a spurious CANDIDATE, which
     the scorer then rejects — correctness is unaffected."""
     from .blocking import BAND_KEYS, BLOCKING_KEYS
@@ -203,20 +210,11 @@ def candidate_pairs(
         for k in band_keys
     ]
     keys = F.filter(F.concat(exact, *bands), lambda x: x.isNotNull())
-    # materialize the NARROW (rid, key-hash) table once: the salted
-    # self-join scans it four ways (key-size aggregate, both cold
-    # sides, hot side), each otherwise re-running the key computation
-    # (and, when `keyed` is not already cached, the whole
-    # normalization lineage). Two scalar columns — cheap blocks.
     all_keys = keyed.select(
         F.col(id_col).alias("rid"), F.explode(keys).alias("bk")
-    ).localCheckpoint(eager=False)
+    )
     pairs = self_join_pairs(
-        all_keys.select(F.col("bk"), F.col("rid")),
-        "bk",
-        id_col="rid",
-        salt_cap=salt_cap,
-        drop_cap=drop_cap,
+        all_keys, "bk", id_col="rid", salt_cap=salt_cap, drop_cap=drop_cap
     )
     return pairs.dropDuplicates(["id_a", "id_b"])
 

@@ -7,21 +7,36 @@ from pyspark.sql import functions as F
 from aml_entity_resolution_assignment_spark.operators import candidates as C
 
 
-def _naive_pairs(spark, rows):
-    """Oracle: plain python pair enumeration per key."""
-    from collections import defaultdict
+def _naive_pair_counts(rows, drop_cap=None):
+    """Oracle: plain python pair enumeration per key, one count per pair
+    of rows. Blocks over `drop_cap` rows (null ids included) are
+    dropped; null keys, null ids and equal ids never pair."""
+    from collections import Counter, defaultdict
 
     blocks = defaultdict(list)
     for rid, key in rows:
         if key is not None:
             blocks[key].append(rid)
-    pairs = set()
+    pairs = Counter()
     for ids in blocks.values():
-        ids = sorted(ids)
+        if drop_cap is not None and len(ids) > drop_cap:
+            continue
+        ids = sorted(i for i in ids if i is not None)
         for i in range(len(ids)):
             for j in range(i + 1, len(ids)):
-                pairs.add((ids[i], ids[j]))
+                if ids[i] != ids[j]:
+                    pairs[(ids[i], ids[j])] += 1
     return pairs
+
+
+def _naive_pairs(spark, rows):
+    return set(_naive_pair_counts(rows))
+
+
+def _pair_counts(df):
+    from collections import Counter
+
+    return Counter((r["id_a"], r["id_b"]) for r in df.collect())
 
 
 @pytest.fixture()
@@ -172,3 +187,110 @@ def test_soundex_title_key_config_driven(spark):
     a = PipelineConfig(work_dir="/tmp/x").fingerprint()
     b = PipelineConfig(work_dir="/tmp/x", soundex_title_key=True).fingerprint()
     assert a != b
+
+
+SALT_CAP, DROP_CAP = 8, 30
+
+
+@pytest.mark.parametrize(
+    "size", [1, 2, SALT_CAP, SALT_CAP + 1, DROP_CAP, DROP_CAP + 1]
+)
+def test_self_join_block_size_edges_match_naive(spark, size):
+    # one block at each edge of the cold / salted / dropped branches,
+    # next to a small cold block
+    rows = [(f"b{i:02d}", "big") for i in range(size)] + [
+        ("c1", "small"),
+        ("c2", "small"),
+        ("c3", "small"),
+    ]
+    df = spark.createDataFrame(rows, "url string, bk string")
+    got = _pair_counts(
+        C.self_join_pairs(df, "bk", salt_cap=SALT_CAP, drop_cap=DROP_CAP)
+    )
+    assert got == _naive_pair_counts(rows, drop_cap=DROP_CAP)
+
+
+@pytest.mark.parametrize("salt_cap", [2, 1000])
+def test_self_join_duplicates_and_nulls_match_naive(spark, salt_cap):
+    # duplicate (key, id) rows repeat their pairs; a duplicate never
+    # pairs with itself; null keys and null ids never pair, but null
+    # ids count toward the block size
+    rows = [
+        ("a", "k"), ("a", "k"), ("b", "k"), ("c", "k"), (None, "k"),
+        ("d", "k"), ("e", "k"), ("e", "k"), ("a", None), ("b", None),
+        (None, "n"), ("x", "n"), (None, "n"), ("y", "n"),
+    ]
+    df = spark.createDataFrame(rows, "url string, bk string")
+    got = _pair_counts(C.self_join_pairs(df, "bk", salt_cap=salt_cap))
+    want = _naive_pair_counts(rows)
+    assert got == want
+    assert want[("a", "b")] == 2 and ("a", "a") not in want
+    # null ids count toward drop_cap, as in the block size
+    capped = _pair_counts(
+        C.self_join_pairs(df, "bk", salt_cap=salt_cap, drop_cap=3)
+    )
+    assert capped == _naive_pair_counts(rows, drop_cap=3) == {}
+
+
+@pytest.mark.parametrize("salt_cap", [3, 1000])
+def test_self_join_long_ids_match_naive(spark, salt_cap):
+    rows = [(i * 7919 % 101, i % 4) for i in range(60)] + [(5, 0), (None, 1)]
+    df = spark.createDataFrame(rows, "id long, bk long")
+    out = C.self_join_pairs(df, "bk", id_col="id", salt_cap=salt_cap)
+    assert out.schema["id_a"].dataType.simpleString() == "bigint"
+    assert _pair_counts(out) == _naive_pair_counts(rows)
+
+
+def test_self_join_partitioning_invariant(spark, skewed_df):
+    rows, df = skewed_df
+    for salt_cap in (8, 10_000):
+        outs = [
+            sorted(
+                C.self_join_pairs(
+                    df.repartition(n), "bk", salt_cap=salt_cap
+                ).collect()
+            )
+            for n in (1, 8)
+        ]
+        assert outs[0] == outs[1]
+        assert {tuple(r) for r in outs[0]} == _naive_pairs(spark, rows)
+
+
+def _keyed_pages(spark, path):
+    """Blocking-keyed generator pages, written and read back: the keys
+    are computed once, and the read's schema job runs here."""
+    from aml_entity_resolution_assignment_spark.operators.blocking import (
+        add_blocking_keys,
+    )
+    from aml_entity_resolution_assignment_spark.sources.generator import (
+        generate_pages,
+    )
+
+    pages = generate_pages(spark, n_entities=40, seed=11).drop("entity_id")
+    add_blocking_keys(pages).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_candidate_pairs_partitioning_invariant(spark, tmp_path):
+    keyed = _keyed_pages(spark, str(tmp_path / "keyed"))
+    outs = [
+        sorted(C.candidate_pairs(keyed.repartition(n), salt_cap=3).collect())
+        for n in (1, 8)
+    ]
+    assert outs[0] and outs[0] == outs[1]
+    assert outs[0] == sorted(C.candidate_pairs(keyed).collect())
+
+
+def test_candidate_pairs_job_budget(spark, tmp_path):
+    """Grouped block emission runs the grouping, the hot-unit
+    repartition, the dedup and the result: 4 jobs, with salted blocks
+    present (salt_cap=3)."""
+    keyed = _keyed_pages(spark, str(tmp_path / "keyed"))
+    sc = spark.sparkContext
+    sc.setJobGroup("cand-budget", "candidate pairs")
+    try:
+        n = len(C.candidate_pairs(keyed, salt_cap=3).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("cand-budget")) <= 4

@@ -3,6 +3,7 @@ sf0.001, canonicalized exactly as the full oracle sweep does
 (tools/check_oracles.py) — a drift in the candidate operator, the pair
 features, the F-S family or the clustering kernels fails here."""
 
+import glob
 import os
 
 import duckdb
@@ -45,6 +46,35 @@ def test_er_core_query_matches_oracle(spark, con, name):
     assert list(got.columns) == list(want.columns)
     assert got.shape == want.shape
     assert (got.astype(str).values == want.astype(str).values).all()
+
+
+def _documents_dirs():
+    """Every directory holding a documents table the queries run on:
+    the oracle data sets and the benchmark's source copy."""
+    here = os.path.dirname(os.path.abspath(entry.__file__))
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(check_oracles.SF), "sf*")))
+    return [d for d in dirs if os.path.exists(f"{d}/documents.parquet")] + [
+        os.path.join(here, "perfbench", "data")
+    ]
+
+
+def test_docs_declared_schema_matches_files(spark):
+    dirs = _documents_dirs()
+    assert len(dirs) >= 2
+    for d in dirs:
+        inferred = spark.read.parquet(f"{d}/documents.parquet").schema
+        assert entry._docs(spark, d).schema == inferred, d
+
+
+def test_docs_read_starts_no_job(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("docs-read", "documents read")
+    try:
+        cols = entry._docs(spark, SF).columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert cols == ["doc_id", "text", "lang", "source", "n_chars"]
+    assert len(sc.statusTracker().getJobIdsForGroup("docs-read")) == 0
 
 
 def test_connected_components_labels_numeric_min(spark, tmp_path):

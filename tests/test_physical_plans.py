@@ -2,6 +2,8 @@
 the plans we designed for — pushdown into scans, no nested-loop joins
 in the candidate path, whole-stage codegen around the rule cascade."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,8 +45,14 @@ def test_candidate_join_is_not_nested_loop(spark, parquet_pages):
     plan = _plan(pairs)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
-        "BroadcastHashJoin" in plan
+    # pairs come from a hash-partitioned grouping on the key: an exchange
+    # on the tall table's key feeds the aggregate that collects each
+    # block's ids
+    assert re.search(r"Arguments: hashpartitioning\(bk#\d+L, \d+\)", plan)
+    assert re.search(
+        r"Keys \[1\]: \[bk#\d+L\]\nFunctions \[2\]: "
+        r"\[count\(1\), collect_list\(rid#",
+        plan,
     )
 
 
@@ -92,17 +100,20 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_self_join_sizes_aggregation_computed_once(spark, parquet_pages):
-    # the oversized-key table is a lazy local checkpoint: the key-size
-    # aggregation shuffles once, inside the checkpoint, and every
-    # downstream broadcast build scans its (tiny) blocks instead of
-    # re-aggregating the key table
+    # the key table is grouped once: the cold and the salted branch
+    # (salt_cap=3 makes both non-empty) read one exchange on the key,
+    # the second as a ReusedExchange; nothing is broadcast or
+    # checkpointed
     keyed = blocking.add_blocking_keys(spark.read.parquet(parquet_pages))
     recs = keyed.select(F.col("bk_host").alias("k"), "url")
     pairs = candidates.self_join_pairs(recs, "k", id_col="url", salt_cap=3)
-    pairs.count()
+    pairs.collect()
     plan = pairs._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "HashAggregate" not in plan
-    assert plan.count("Scan ExistingRDD") >= 2
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"^[\s:|+-]*Exchange hashpartitioning\(k#", final, re.M)) == 1
+    assert len(re.findall(r"ReusedExchange .*hashpartitioning\(k#", final)) == 1
+    assert "BroadcastExchange" not in final
+    assert "Scan ExistingRDD" not in final
 
 
 def test_resolve_plan_single_broadcast_and_shared_window_exchange(
@@ -124,8 +135,6 @@ def test_resolve_plan_single_broadcast_and_shared_window_exchange(
     corpus = add_blocking_keys(pages)
     queries = add_blocking_keys(pages.limit(8))
     plan = _plan(resolve(queries, corpus, already_keyed=True))
-
-    import re
 
     assert "BroadcastNestedLoopJoin" not in plan
     # formatted explain lists each node twice (tree + detail section):
