@@ -29,7 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType, BinaryType, LongType, StructField, StructType,
+)
 
 NUM_PERM = 128
 LSH_BANDS = 16
@@ -425,6 +427,30 @@ def simhash_bands_udf() -> Column:
     return F.pandas_udf(batch_simhash_bands, ArrayType(LongType()))
 
 
+def simhash_keys_udf() -> Column:
+    """text -> struct(simhash, bk_simhash_bands) from ONE SimHash per
+    text (the production 'fast' token hash); see minhash_keys_udf."""
+
+    def simhash_keys(texts: pd.Series) -> pd.DataFrame:
+        hs = batch_simhash(texts)
+        return pd.DataFrame(
+            {
+                "simhash": hs,
+                "bk_simhash_bands": batch_simhash_bands(hs),
+            }
+        )
+
+    return F.pandas_udf(
+        simhash_keys,
+        StructType(
+            [
+                StructField("simhash", LongType()),
+                StructField("bk_simhash_bands", ArrayType(LongType())),
+            ]
+        ),
+    )
+
+
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
@@ -451,10 +477,30 @@ def batch_pack_sig(sigs: pd.Series) -> pd.Series:
     return pd.Series(out, index=sigs.index, dtype="object")
 
 
-def pack_sig_udf() -> Column:
-    from pyspark.sql.types import BinaryType
+def minhash_keys_udf() -> Column:
+    """text -> struct(bk_minhash_bands, sig_bin): the keyed stage's
+    MinHash outputs from ONE signature per text. Composed as separate
+    UDFs (band_hashes(minhash(t)), pack_sig(minhash(t))) the chained
+    kernel runs once per consumer."""
 
-    return F.pandas_udf(batch_pack_sig, BinaryType())
+    def minhash_keys(texts: pd.Series) -> pd.DataFrame:
+        sigs = batch_minhash(texts)
+        return pd.DataFrame(
+            {
+                "bk_minhash_bands": batch_band_hashes(sigs),
+                "sig_bin": batch_pack_sig(sigs),
+            }
+        )
+
+    return F.pandas_udf(
+        minhash_keys,
+        StructType(
+            [
+                StructField("bk_minhash_bands", ArrayType(LongType())),
+                StructField("sig_bin", BinaryType()),
+            ]
+        ),
+    )
 
 
 def batch_token_hashset(texts: pd.Series) -> pd.Series:
@@ -489,6 +535,4 @@ def batch_token_hashset(texts: pd.Series) -> pd.Series:
 
 
 def token_hashset_udf() -> Column:
-    from pyspark.sql.types import BinaryType
-
     return F.pandas_udf(batch_token_hashset, BinaryType())

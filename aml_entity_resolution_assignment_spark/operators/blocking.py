@@ -43,9 +43,10 @@ def add_blocking_keys(
 ) -> DataFrame:
     """pages -> pages_keyed: normalized columns + blocking keys.
 
-    One narrow projection (no shuffle); the two pandas UDFs (minhash,
-    simhash) run over the same Arrow batch scan. With
-    `soundex_title_key`, adds the optional phonetic SOUNDEX_KEY column.
+    One narrow projection (no shuffle); the pandas UDFs run over the
+    same Arrow batch scan, and each text kernel (MinHash, SimHash,
+    token hash set) runs once per page. With `soundex_title_key`, adds
+    the optional phonetic SOUNDEX_KEY column.
     """
     host = N.norm_hostname(N.url_host(F.col("url")))
     norm_url = N.norm_url_for_match(F.col("url"))
@@ -64,6 +65,7 @@ def add_blocking_keys(
         norm_title.alias("norm_title"),
         norm_text.alias("norm_text"),
     )
+    text = F.when(F.col("norm_text") != "", F.col("norm_text"))
     keyed = keyed.select(
         "*",
         F.when(F.col("host") != "", F.col("host")).alias("bk_host"),
@@ -76,28 +78,27 @@ def add_blocking_keys(
             if soundex_title_key
             else []
         ),
-        mh.minhash_udf()(F.when(F.col("norm_text") != "", F.col("norm_text"))).alias(
-            "minhash_sig"
-        ),
-        mh.simhash_udf()(F.when(F.col("norm_text") != "", F.col("norm_text"))).alias(
-            "simhash"
-        ),
-    )
-    keyed = keyed.select(
-        "*",
-        mh.band_hashes_udf()(F.col("minhash_sig")).alias("bk_minhash_bands"),
-        mh.simhash_bands_udf()(F.col("simhash")).alias("bk_simhash_bands"),
-        # compact scoring payload (computed once here, shipped instead
-        # of raw text / ArrayType sig by the hydration joins)
-        mh.pack_sig_udf()(F.col("minhash_sig")).alias("sig_bin"),
+        # one UDF per kernel, each returning every column derived from
+        # its signature: the kernel runs once per page
+        mh.minhash_keys_udf()(text).alias("_mh"),
+        mh.simhash_keys_udf()(text).alias("_sh"),
+        # compact scoring payload, shipped by the hydration joins
+        # instead of raw text
         mh.token_hashset_udf()(F.col("norm_text")).alias("tokens_bin"),
     )
-    # norm_text (~text-sized) and the ArrayType signature (~1KB/row)
-    # are DERIVATION intermediates: every downstream consumer uses the
-    # packed forms (tokens_bin / sig_bin / band columns). Dropping them
-    # halves the persisted/checkpointed keyed table — at 10^12 docs
-    # that is the difference between a 1x and 2-3x stage-table footprint
-    return keyed.drop("norm_text", "minhash_sig")
+    # norm_text (~text-sized) is a DERIVATION intermediate: every
+    # downstream consumer uses the packed forms (tokens_bin / sig_bin /
+    # band columns). Dropping it halves the persisted/checkpointed
+    # keyed table — at 10^12 docs that is the difference between a 1x
+    # and 2-3x stage-table footprint
+    return keyed.select(
+        *(c for c in keyed.columns if c not in ("norm_text", "_mh", "_sh", "tokens_bin")),
+        "_sh.simhash",
+        "_mh.bk_minhash_bands",
+        "_sh.bk_simhash_bands",
+        "_mh.sig_bin",
+        "tokens_bin",
+    )
 
 
 def _title_soundex_key(norm_title):

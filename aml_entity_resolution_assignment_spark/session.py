@@ -4,14 +4,47 @@ Centralizes the configs that matter at 100 TB: AQE (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow for every pandas-UDF
 boundary, and sane shuffle-partition defaults for local testing that a
 cluster deployment would override via spark-submit --conf.
+
+Case mappings. Spark's default `spark.sql.icu.caseMappings.enabled=true`
+sends `lower()`/`upper()` through ICU. The first such call in a JVM
+loads `CollationAwareUTF8String`, whose static initializer runs ICU
+`toTitleCase` over all 1,114,112 code points to fill a title-case table
+that only `initcap` reads; it does so even for pure-ASCII input. The
+engine's JVM normalizers (hostname, url, body text, email) call
+`lower()`, so every cold session paid for that table in its first keyed
+stage or ER query: 0.86 s on a 4-core host (`tools/cold_probe.py`, the
+`lower` row's `extra_s`; 0.05 s with the default below). The engine
+default is `false` (CASE_MAPPINGS): `lower()` and `upper()` then take
+`UTF8String`'s ASCII fast path, and `String.toLowerCase()` /
+`toUpperCase()` for any other string.
+
+The two paths agree on ASCII (every shipped `documents` table is 100%
+ASCII), on final sigma, U+0130 and ß. Over all 1,112,064 scalar code
+points (each in a "c Ac?c" context) they differ only on letters added
+in Unicode 14-16, which ICU case-maps and the JDK 17 tables leave as
+they are: `lower()` on 67 capitals (U+1C89, U+2C2F, U+A7C0-U+A7DC,
+U+10570-U+10595, U+10D50-U+10D65 ...), `upper()` on their 67 small
+partners. `tests/test_normalize.py` pins both lists.
+
+Both paths follow the JVM's default locale: Spark's ICU path calls ICU
+with it, so under a Turkish or Azerbaijani locale both lowercase I to
+dotless ı, and under Lithuanian both keep the dot on i before an
+accent. Turning ICU back on for those locales would change no output
+outside the Unicode 14-16 band above (under Lithuanian, also the 62
+combining marks of that band after an I), so the default holds for
+every locale.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterable
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
 
 # Defaults chosen for the local[32] sandbox; on a real cluster these are
 # overridden by spark-submit. AQE coalesces the 2x-cores shuffle
@@ -40,7 +73,16 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
+    # JVM case mappings: see the module docstring
+    CASE_MAPPINGS: "false",
 }
+
+
+def missing_defaults(conf: SparkConf, keys: Iterable[str]) -> dict[str, str]:
+    """The engine defaults among `keys` that `conf` does not set. A key
+    `conf` already holds (say, from spark-submit --conf) is left out,
+    so applying the result never overrides the deployment."""
+    return {k: _DEFAULTS[k] for k in keys if not conf.contains(k)}
 
 
 def default_driver_memory() -> str:
@@ -63,9 +105,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    `master` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]); a
-    cluster deployment passes master via spark-submit and this function
-    leaves it untouched.
+    `master` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]). The
+    engine defaults and `master` are set on the builder, so they
+    override a spark-submit conf; a cluster job builds its session as
+    `jobs/run_er_pipeline.py` does, applying only `missing_defaults`.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

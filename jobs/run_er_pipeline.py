@@ -41,21 +41,29 @@ def main() -> None:
     args = ap.parse_args()
 
     # Session comes from spark-submit's conf; only app-level defaults
-    # (AQE, Arrow) are applied on top, and only where not already set.
+    # (AQE, skew join, Arrow, JVM case mappings) are applied on top, and
+    # only where the submit conf does not set them. A builder option
+    # would override the submit conf, so they are set on the session.
     from pyspark.sql import SparkSession
 
     from aml_entity_resolution_assignment_spark.plans.pipeline import (
         PipelineConfig, run_pipeline,
     )
+    from aml_entity_resolution_assignment_spark.session import (
+        CASE_MAPPINGS, missing_defaults,
+    )
 
-    builder = SparkSession.builder.appName("er-pipeline")
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = SparkSession.builder.appName("er-pipeline").getOrCreate()
+    for k, v in missing_defaults(
+        spark.sparkContext.getConf(),
+        (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.skewJoin.enabled",
+            "spark.sql.execution.arrow.pyspark.enabled",
+            CASE_MAPPINGS,
+        ),
+    ).items():
+        spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic:

@@ -130,6 +130,36 @@ def test_udfs_run_in_spark(spark):
     assert list(rows["a"]["sig"]) == scalar, "UDF path must equal scalar path"
 
 
+def test_keys_udfs_equal_their_kernels(spark):
+    """minhash_keys_udf / simhash_keys_udf give exactly what the kernels
+    give, also for null/empty/whitespace text and an all-null batch."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    texts = ["spark entity resolution text body", "", None, "   ", "a b a"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string")
+    for frame in (df, df.where(F.col("text").isNull())):
+        rows = frame.select(
+            "id",
+            mh.minhash_keys_udf()(F.col("text")).alias("m"),
+            mh.simhash_keys_udf()(F.col("text")).alias("s"),
+        ).select("id", "m.*", "s.*").orderBy("id").collect()
+        want = pd.Series([texts[r["id"]] for r in rows])
+        sigs = mh.batch_minhash(want)
+        sh = mh.batch_simhash(want)
+
+        def col(name):
+            return [r[name] for r in rows]
+
+        def lists(values):
+            return [None if v is None else list(v) for v in values]
+
+        assert col("bk_minhash_bands") == lists(mh.batch_band_hashes(sigs))
+        assert col("sig_bin") == list(mh.batch_pack_sig(sigs))
+        assert col("simhash") == [None if pd.isna(v) else int(v) for v in sh]
+        assert col("bk_simhash_bands") == lists(mh.batch_simhash_bands(sh))
+
+
 def test_simhash_token_hash_paths_batch_scalar_parity():
     """Both token-hash paths: batch == scalar, and the two paths are
     internally consistent (near-dup structure preserved) though their

@@ -99,6 +99,23 @@ def test_small_dim_join_broadcasts(spark):
     assert "BroadcastHashJoin" in _plan(q)
 
 
+def test_keyed_stage_runs_each_text_kernel_once(spark, parquet_pages):
+    """One ArrowEvalPython node evaluates every keyed-stage kernel, each
+    exactly once per page: MinHash and SimHash each feed all their
+    columns from one UDF call, which Catalyst must not inline once per
+    struct field, and no UDF is chained inside another."""
+    keyed = blocking.add_blocking_keys(spark.read.parquet(parquet_pages))
+    keyed.write.format("noop").mode("overwrite").save()
+    plan = keyed._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython [" in ln]
+    assert len(nodes) == 1, plan
+    udfs = re.findall(r"(\w+)\(", nodes[0].split("ArrowEvalPython [")[1].split("], [")[0])
+    kernels = ["batch_extract_title", "minhash_keys", "simhash_keys", "batch_token_hashset"]
+    assert {k: udfs.count(k) for k in kernels} == dict.fromkeys(kernels, 1), nodes[0]
+    # the only nesting is the title fold over the extracted title
+    assert len(udfs) == len(kernels) + 1 and udfs.count("batch_ascii_fold") == 1, nodes[0]
+
+
 def test_self_join_sizes_aggregation_computed_once(spark, parquet_pages):
     # the key table is grouped once: the cold and the salted branch
     # (salt_cap=3 makes both non-empty) read one exchange on the key,

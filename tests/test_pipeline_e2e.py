@@ -223,3 +223,39 @@ def test_bcubed_hand_computed_and_properties(spark):
     want_r = (2 / 3 + 2 / 3 + 1 / 3 + 1 / 2 + 1 / 2) / 5
     pr, rc, f1 = run(pred, truth)
     assert abs(pr - want_p) < 1e-12 and abs(rc - want_r) < 1e-12
+
+
+def _content_hash(df):
+    """(row count, sum of row hashes): equal for equal row multisets,
+    whatever the row order or partitioning."""
+    from pyspark.sql import functions as F
+
+    h = F.xxhash64(*df.columns).cast("decimal(38,0)")
+    return tuple(df.agg(F.count("*"), F.sum(h)).first())
+
+
+def test_keyed_table_is_partitioning_invariant(spark):
+    """The keyed table's bytes do not depend on how pages are split
+    into partitions and Arrow batches."""
+    from aml_entity_resolution_assignment_spark.operators.blocking import (
+        add_blocking_keys,
+    )
+
+    pages = generate_pages(spark, n_entities=120, seed=7).drop("entity_id").localCheckpoint()
+    one = _content_hash(add_blocking_keys(pages.repartition(1)))
+    eight = _content_hash(add_blocking_keys(pages.repartition(8)))
+    assert one == eight and one[0] == pages.count()
+
+
+def test_pipeline_entity_map_is_partitioning_invariant(spark, tmp_path):
+    pages = generate_pages(spark, n_entities=120, seed=7).drop("entity_id").localCheckpoint()
+    hashes = [
+        _content_hash(
+            run_pipeline(
+                spark, pages.repartition(n),
+                PipelineConfig(work_dir=str(tmp_path / f"p{n}"), resume=False),
+            )["entity_map"]
+        )
+        for n in (1, 8)
+    ]
+    assert hashes[0] == hashes[1] and hashes[0][0] == pages.count()
