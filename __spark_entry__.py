@@ -4034,8 +4034,8 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key END-TO-END with a hard oracle:
-    the 16-bit-per-dimension z-value over (user_id, value) that
-    zorder_sort range-partitions by (operators/zorder.py) — closed-form
+    the 16-bit-per-dimension z-value over (user_id, value) that a
+    re-clustering write range-partitions by (operators/zorder.py) — closed-form
     integer shift/mask arithmetic, recomputed term-for-term in SQL."""
     from aml_entity_resolution_assignment_spark.operators.zorder import (
         zorder_value,

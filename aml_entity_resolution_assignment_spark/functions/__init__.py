@@ -1,28 +1,2 @@
-from . import (  # noqa: F401
-    aiff,
-    avi,
-    bmp,
-    bpe,
-    bzip2,
-    charset,
-    exif,
-    flac,
-    gif,
-    html,
-    id3,
-    jpeg,
-    minhash,
-    mp4,
-    mpeg_audio,
-    normalize,
-    png,
-    pprl,
-    qoi,
-    similarity,
-    text,
-    tiff,
-    vp8,
-    wav,
-    webp,
-    wikitext,
-)
+"""Column kernels and codecs: the Arrow-batched pandas UDFs and the
+pure-Python decoders they call. Import each submodule directly."""

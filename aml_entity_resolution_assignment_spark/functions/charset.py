@@ -14,11 +14,6 @@ deterministically without a transport layer:
      content; decodes any byte sequence, so the pipeline never drops
      a page for encoding reasons).
 
-Plus `fix_mojibake`: the single most common crawl corruption —
-UTF-8 bytes decoded as latin-1/cp1252 somewhere upstream ("cafÃ©") —
-repaired by the lossless inverse round-trip when (and only when) it
-applies cleanly.
-
 The reference repo ingests pre-decoded CSVs; this is the byte-level
 front door its pipeline never needed but a WARC-fed one does.
 """
@@ -72,34 +67,6 @@ def detect_and_decode(payload: bytes | None) -> tuple[str | None, str | None]:
         return b.decode("cp1252", "replace"), "cp1252"
 
 
-# lead byte of a 2-3 byte UTF-8 sequence seen through cp1252
-# (\u00c2-\u00c5, \u00e2) followed by a continuation byte seen
-# through cp1252: U+0080-U+00BF plus the cp1252 remappings of
-# raw bytes 0x80-0x9F (curly quotes, daggers, euro, TM, ...)
-_MOJIBAKE_HINT = re.compile(
-    "[\u00c2-\u00c5\u00e2]"
-    "[\u0080-\u00bf\u20ac\u201a\u0192\u201e\u2026\u2020\u2021"
-    "\u02c6\u2030\u0160\u2039\u0152\u017d\u2018\u2019\u201c"
-    "\u201d\u2022\u2013\u2014\u02dc\u2122\u0161\u203a\u0153"
-    "\u017e\u0178]"
-)
-
-
-def fix_mojibake(text: str | None) -> str | None:
-    """Repair double-encoded UTF-8 ("cafÃ©" -> "café"): if the text
-    round-trips losslessly through cp1252-encode -> utf-8-decode AND
-    shows the Ã/Â/â mojibake signature, return the repaired string;
-    otherwise return the input unchanged. Pure-ASCII text is always
-    unchanged (the signature can't appear)."""
-    if text is None or not _MOJIBAKE_HINT.search(text):
-        return text
-    try:
-        repaired = text.encode("cp1252").decode("utf-8")
-    except (UnicodeEncodeError, UnicodeDecodeError):
-        return text
-    return repaired
-
-
 def decode_html_col(col):
     """Arrow-batched column form: binary -> struct(text, charset)."""
     import pandas as pd
@@ -112,21 +79,5 @@ def decode_html_col(col):
         )
 
     _k = pandas_udf(_k, "text string, charset string")
-
-    return _k(col)
-
-
-def fix_mojibake_col(col):
-    """Arrow-batched column form of fix_mojibake."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    def _k(s):
-        return pd.Series(
-            [fix_mojibake(v) for v in s], index=s.index, dtype="object"
-        )
-
-    _k = pandas_udf(_k, StringType())
 
     return _k(col)

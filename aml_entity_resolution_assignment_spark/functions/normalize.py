@@ -246,16 +246,8 @@ def extract_title(html: bytes | str | None) -> str | None:
     return t.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&").strip()
 
 
-def batch_extract_text(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
-
-
 def batch_extract_title(html: pd.Series) -> pd.Series:
     return html.map(extract_title)
-
-
-def extract_text_udf() -> Column:
-    return F.pandas_udf(batch_extract_text, StringType())
 
 
 def extract_title_udf() -> Column:

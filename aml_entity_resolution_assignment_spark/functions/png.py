@@ -62,16 +62,6 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _paeth_vec(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     """Paeth predictor over int32 channel vectors."""
     p = a + b - c
@@ -462,22 +452,6 @@ def _png_chunks(payload: bytes):
         if tag == b"IEND":
             return
         pos += 12 + length
-
-
-def is_apng(payload: bytes) -> bool:
-    """True iff ``payload`` is a PNG carrying an acTL animation-control
-    chunk (the spec's discriminator: acTL before IDAT)."""
-    if not payload or payload[:8] != _SIG:
-        return False
-    try:
-        for tag, _ in _png_chunks(payload):
-            if tag == b"acTL":
-                return True
-            if tag == b"IDAT":
-                return False
-    except ValueError:
-        return False
-    return False
 
 
 def _to_rgba(img: np.ndarray) -> np.ndarray:

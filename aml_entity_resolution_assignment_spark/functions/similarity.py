@@ -510,16 +510,6 @@ def batch_edit_score(a: pd.Series, b: pd.Series, damerau: bool = False) -> pd.Se
     return pd.Series(out, index=a.index, dtype="float64")
 
 
-def batch_token_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-    a = _as_str(a)
-    b = _as_str(b)
-    return pd.Series(
-        [token_jaccard(x, y) for x, y in zip(a, b)],
-        index=a.index,
-        dtype="float64",
-    )
-
-
 def batch_hashset_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
     """Exact Jaccard of two uint32-LE-packed sorted hash sets
     (functions/minhash.py:batch_token_hashset) — the shuffle-compact
@@ -598,19 +588,6 @@ def batch_packed_sig_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
             sa = np.frombuffer(xa, dtype=np.uint32)
             sb = np.frombuffer(xb, dtype=np.uint32)
             out[i] = float(np.mean(sa == sb))
-    return pd.Series(out, index=a.index, dtype="float64")
-
-
-def batch_signature_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Fraction of equal positions between two equal-length int arrays
-    (MinHash signature similarity — an unbiased Jaccard estimate)."""
-    out = np.zeros(len(a), dtype="float64")
-    for i, (x, y) in enumerate(zip(a, b)):
-        if x is None or y is None or len(x) == 0 or len(y) == 0:
-            continue
-        xa = np.asarray(x, dtype=np.int64)
-        ya = np.asarray(y, dtype=np.int64)
-        out[i] = float(np.mean(xa == ya))
     return pd.Series(out, index=a.index, dtype="float64")
 
 

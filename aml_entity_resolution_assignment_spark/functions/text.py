@@ -9,8 +9,6 @@ vectorized pandas UDF.
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -109,15 +107,6 @@ def quality_score(c: Column) -> Column:
 
 _FP_BASE = 1000003
 _FP_MOD = (1 << 61) - 1
-
-
-def _fp_token_hash(tok: str) -> int:
-    """Token hash for the fingerprint: last 8 md5 bytes little-endian —
-    identical to DuckDB md5_number_lower(tok), so the whole rolling
-    hash is recomputable in ANSI SQL (list_reduce oracle twin)."""
-    import hashlib
-
-    return int.from_bytes(hashlib.md5(tok.encode("utf-8")).digest()[8:16], "little")
 
 
 def fingerprint(text: str | None, token_hash: str = "fast") -> int | None:

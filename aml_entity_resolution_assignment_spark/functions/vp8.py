@@ -967,10 +967,6 @@ def _avg3(a, b, c):
     return (np.asarray(a, dtype=np.int32) + 2 * np.asarray(b, dtype=np.int32) + np.asarray(c, dtype=np.int32) + 2) >> 2
 
 
-def _avg2(a, b):
-    return (np.asarray(a, dtype=np.int32) + np.asarray(b, dtype=np.int32) + 1) >> 1
-
-
 def pred_b(mode: int, above: np.ndarray, above_right: np.ndarray, left: np.ndarray, corner: int) -> np.ndarray:
     """4x4 subblock predictors (RFC 6386 §12.3; pixel-assignment maps
     follow the spec's reference decoder). `above`/`left` are the 4

@@ -1,1 +1,1 @@
-from . import model  # noqa: F401
+"""Spark ML pair classifier: train, evaluate, score (`ml.model`)."""

@@ -1,31 +1,3 @@
-from . import (  # noqa: F401
-    ann,
-    blocking,
-    candidates,
-    checks,
-    classify,
-    cluster,
-    dedup,
-    evaluate,
-    events,
-    features,
-    fellegi,
-    golden,
-    imagehash,
-    joins,
-    linkgraph,
-    metablocking,
-    multimodal,
-    packing,
-    pii,
-    quality,
-    resolve,
-    robots,
-    sampling,
-    scd,
-    search,
-    sketches,
-    snapshots,
-    urls,
-    zorder,
-)
+"""DataFrame-in / DataFrame-out ER operators: blocking, candidate
+pairs, features, classify, clustering, evaluation and the rest. Import
+each submodule directly."""

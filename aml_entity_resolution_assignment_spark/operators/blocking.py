@@ -136,27 +136,6 @@ def key_coverage(keyed: DataFrame) -> DataFrame:
     )
 
 
-def block_stats(keyed: DataFrame, keys: list[str] | None = None, top: int = 3) -> DataFrame:
-    """E7 heavy-hitter report (matching.py:50-76): top-N largest blocks
-    per key with the block size — feeds the metrics table and the
-    salting decision."""
-    keys = keys or BLOCKING_KEYS
-    parts = []
-    for k in keys:
-        parts.append(
-            keyed.where(F.col(k).isNotNull())
-            .groupBy(F.col(k).alias("block_value"))
-            .agg(F.count("*").alias("cnt"))
-            .orderBy(F.desc("cnt"), "block_value")
-            .limit(top)
-            .select(F.lit(k).alias("key"), "block_value", "cnt")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def blocking_health(n_records: int, n_pairs: int) -> dict[str, float]:
     """Reduction ratio + pairs-per-record (matching.py:39-48) from the
     keyed record count and the candidate pair count."""

@@ -29,7 +29,7 @@ generated from each block's list:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_CAP = 2000  # block size above which the block is salted
@@ -89,7 +89,12 @@ def self_join_pairs(
     triangular (i <= j) grid of chunk pairs becomes s*(s+1)/2 units
     (key, i, j), and only these units are repartitioned, so one hot key
     spreads over many tasks instead of one quadratic straggler. Both
-    branches read the one grouping exchange.
+    branches read the one grouping exchange only when `df` is
+    file-backed (or recomputed from its source): AQE then reuses the
+    exchange. Over a `.cache()`d input (one TableCacheQueryStage per
+    branch) or a `localCheckpoint()`, eager or lazy, the key table is
+    shuffled twice: 5 jobs instead of 4 for a `count()` of 400 rows at
+    local[2]. The pipeline passes parquet reads.
     """
     blocks = (
         df.where(F.col(key).isNotNull())
@@ -217,19 +222,3 @@ def candidate_pairs(
         all_keys, "bk", id_col="rid", salt_cap=salt_cap, drop_cap=drop_cap
     )
     return pairs.dropDuplicates(["id_a", "id_b"])
-
-
-def limit_candidates_per_record(
-    pairs: DataFrame, scores: str | None = None, limit: int = 50
-) -> DataFrame:
-    """A5-style per-record candidate cap (api.py:163: LIMIT 50): keep at
-    most `limit` partners per id_a via a window — protects the scoring
-    stage from pathological fan-out."""
-    w = Window.partitionBy("id_a").orderBy(
-        F.desc(scores) if scores else F.asc("id_b")
-    )
-    return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= limit)
-        .drop("_rn")
-    )

@@ -110,7 +110,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     id_col: str = "url",
     max_iter: int = 50,
-    tune_shuffle_partitions: bool = True,
 ) -> DataFrame:
     """(id_a, id_b) match edges [+ all-vertex DataFrame] ->
     (id_col, predicted_entity_id) with label = min member id.
@@ -127,17 +126,16 @@ def connected_components(
     paths (min member id in binary string order, which Python `str`
     order equals).
 
-    `tune_shuffle_partitions` applies to the distributed rounds only.
-    It sizes the iterative shuffles to the shrinking edge set by
-    setting spark.sql.shuffle.partitions around each round's job ONLY
-    (set immediately before the collect, restored immediately after —
-    not across the loop body), because AQE with parallelismFirst=true
-    refuses to coalesce tiny shuffles and the O(log n) tail otherwise
-    pays fixed per-task cost x partitions x stages. The conf is
-    session-shared: a query on the SAME session that happens to be
-    planned during a round's job window would see the shrunken value.
-    Pass False when running CC concurrently with other work on a
-    shared session (streaming foreachBatch, parallel jobs).
+    The distributed rounds size their shuffles to the shrinking edge
+    set by setting spark.sql.shuffle.partitions around each round's job
+    ONLY (set immediately before the collect, restored immediately
+    after — not across the loop body), because AQE with
+    parallelismFirst=true refuses to coalesce tiny shuffles and the
+    O(log n) tail otherwise pays fixed per-task cost x partitions x
+    stages. The conf is session-shared: a query on the SAME session
+    that is planned during a round's job window (streaming
+    foreachBatch, parallel jobs) sees the shrunken value. Graphs within
+    DRIVER_CC_EDGES never reach the rounds, so never touch the conf.
     """
     # canonical orientation: _symmetrize's no-dedup union relies on the
     # input never containing both (a,b) and (b,a) — least/greatest
@@ -174,7 +172,7 @@ def connected_components(
             "member string, component string",
         )
     else:
-        assign = _star_rounds(cur, max_iter, tune_shuffle_partitions)
+        assign = _star_rounds(cur, max_iter)
 
     if vertices is not None:
         verts = (
@@ -189,9 +187,7 @@ def connected_components(
     )
 
 
-def _star_rounds(
-    cur: DataFrame, max_iter: int, tune_shuffle_partitions: bool
-) -> DataFrame:
+def _star_rounds(cur: DataFrame, max_iter: int) -> DataFrame:
     """The distributed CC: alternating large-star/small-star rounds over
     canonical (u, v) edges, one fused job per round, until the edge set
     stops changing. Returns (member, component) for every endpoint."""
@@ -207,7 +203,7 @@ def _star_rounds(
         before returning, so the mutation window is the job itself,
         not the loop body (ADVICE r3: don't leave a shrunken count
         visible to concurrent planners any longer than necessary)."""
-        if adaptive is None or not tune_shuffle_partitions:
+        if adaptive is None:
             return df.collect()[0]
         spark.conf.set(conf_key, str(adaptive))
         try:

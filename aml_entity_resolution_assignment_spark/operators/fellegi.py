@@ -388,49 +388,6 @@ def tf_adjusted_weights(
     )
 
 
-def pseudo_random_pairs(records: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic pseudo-random disjoint record pairs for
-    u-estimation: rank records by xxhash64(id) (a fixed, seedless
-    scramble of any id ordering) and pair rank r with rank r + N//2.
-    At web scale the same-entity hit rate of such pairs is ~cluster
-    size / N — statistically negligible, exactly the Splink
-    random-sampling assumption. Output: floor(N/2) (id_a, id_b) rows.
-
-    Uses the distributed two-phase global rank (no single-reducer
-    window); one extra equi-join pairs the halves.
-    """
-    from .blocking import _global_rank
-
-    base = records.select(
-        F.col(id_col).alias("_pri"),
-        F.xxhash64(F.col(id_col).cast("string")).alias("_h"),
-    )
-    ranked = _global_rank(base, ["_h", "_pri"])
-    n = ranked.count()
-    half = n // 2
-    a = ranked.where(F.col("rank") <= half).select(
-        F.col("_pri").alias("id_a"), F.col("rank").alias("_r")
-    )
-    b = ranked.where(
-        (F.col("rank") > half) & (F.col("rank") <= 2 * half)
-    ).select(F.col("_pri").alias("id_b"), (F.col("rank") - half).alias("_r"))
-    return a.join(b, "_r").drop("_r")
-
-
-def estimate_u_from_flags(flagged: DataFrame, fields: Sequence[str]) -> list[float]:
-    """u_k = P(field k agrees | random pair) — the per-field mean of
-    the 0/1 flags over (pseudo-)random pairs, clamped away from {0,1}
-    and rounded like every other EM parameter."""
-    row = flagged.agg(
-        *[F.avg(F.col(f).cast("double")).alias(f) for f in fields]
-    ).collect()[0]
-    eps = 1e-6
-    return [
-        round(min(max(float(row[f] or 0.0), eps), 1 - eps), PARAM_DECIMALS)
-        for f in fields
-    ]
-
-
 def review_queue(
     scored: DataFrame,
     k: int = 100,

@@ -34,7 +34,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "
@@ -347,47 +346,6 @@ def extract_media_features(
             )
 
     return media.mapInPandas(run, schema=_FEATURE_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Frame-sampling plan for video rows: emits (media_id, frame_ts_ms)
-    rows via sequence/explode — pure built-ins; the actual frame decode
-    would plug into extract_media_features per frame."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def attach_media_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata projection useful for filtering before any decode:
-    payload size, aspect ratio, bytes-per-pixel — all JVM-side."""
-    return media.select(
-        "media_id",
-        "kind",
-        "mime",
-        F.length("payload").alias("n_bytes"),
-        (F.col("width") * F.col("height")).alias("n_pixels"),
-        F.when(
-            (F.col("width") > 0) & (F.col("height") > 0),
-            F.col("width") / F.col("height"),
-        ).alias("aspect_ratio"),
-        F.when(
-            (F.col("width") > 0) & (F.col("height") > 0),
-            F.length("payload") / (F.col("width") * F.col("height")),
-        ).alias("bytes_per_pixel"),
-    )
 
 
 _EXIF_SCHEMA = (

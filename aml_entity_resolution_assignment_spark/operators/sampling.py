@@ -159,36 +159,6 @@ def weighted_sample(
     )
 
 
-def temperature_rates(
-    df: DataFrame,
-    alpha: float,
-    source_col: str = "source",
-    target_fraction: float = 1.0,
-) -> dict[str, float]:
-    """Temperature-scaled mixture rates (the multilingual/multi-source
-    re-balancing rule, e.g. mT5's alpha=0.3): source s with n_s rows
-    gets sampling mass proportional to n_s^alpha, normalized so the
-    expected TOTAL kept fraction is `target_fraction`. Returns a
-    {source: keep_rate} dict for mixture_sample / mixture_repeat
-    (rates may exceed 1.0 — that is up-sampling: use mixture_repeat).
-    Driver-side by design: mixture configs are dozens of sources; the
-    counts come from one map-side-combined groupBy."""
-    counts = {
-        r[0]: r[1]
-        for r in df.groupBy(source_col).count().collect()
-        if r[0] is not None
-    }
-    if not counts:
-        return {}
-    total = sum(counts.values())
-    mass = {s: c ** alpha for s, c in counts.items()}
-    z = sum(mass.values())
-    return {
-        s: (mass[s] / z) * target_fraction * total / counts[s]
-        for s in counts
-    }
-
-
 def dsir_weights(
     docs: DataFrame,
     target_docs: DataFrame,

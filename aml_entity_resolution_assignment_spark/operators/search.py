@@ -33,21 +33,6 @@ def _tokens(text_col: str):
     return F.split(F.lower(F.col(text_col)), r"\s+")
 
 
-def build_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(term, doc_id, tf) inverted-index rows, empty terms dropped."""
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_tokens(text_col)).alias("term"),
-        )
-        .where(F.col("term") != "")
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-
-
 def bm25_scores(
     docs: DataFrame,
     query_terms: Sequence[str],

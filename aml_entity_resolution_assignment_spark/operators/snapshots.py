@@ -1,13 +1,13 @@
-"""Snapshot differencing + SCD2 history maintenance.
+"""Snapshot differencing + change-rate recrawl scheduling.
 
 Crawl corpora refresh: each crawl is a new snapshot of (url -> page),
-and incremental pipelines need (a) the CHANGE SET between snapshots —
-re-process only what moved — and (b) a validity-interval HISTORY so
-any past corpus state can be reconstructed (the slowly-changing-
-dimension type 2 shape every lakehouse MERGE implements).
+and incremental pipelines need the CHANGE SET between snapshots —
+re-process only what moved — and a revisit schedule driven by how
+often each url changed. The validity-interval history of an attribute
+(SCD type 2) is `operators/scd.scd2_intervals`.
 
-Both are single full-outer-join plans on the key — the 100 TB form:
-snapshots bucketed/partitioned by key co-locate the join; change
+The diff is a single full-outer-join plan on the key — the 100 TB
+form: snapshots bucketed/partitioned by key co-locate the join; change
 detection compares one md5 over the tracked columns (computed in the
 scan projection, null-safe), never column-by-column row comparators.
 No UDFs, no windows over the full table.
@@ -74,79 +74,6 @@ def snapshot_diff(
         .where(F.col(CHANGE_COL).isNotNull())
         .select(*key_cols, *out_vals, CHANGE_COL)
     )
-
-
-def scd2_init(
-    snapshot: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str],
-    ts,
-) -> DataFrame:
-    """Bootstrap a history table from the first snapshot: every row
-    open-ended (valid_to NULL)."""
-    return snapshot.select(
-        *key_cols,
-        *compare_cols,
-        F.lit(ts).cast("timestamp").alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-    )
-
-
-def scd2_apply(
-    history: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str],
-    ts,
-) -> DataFrame:
-    """Fold a new snapshot into an SCD2 history at time `ts`: rows of
-    updated/deleted keys close (valid_to = ts), inserted/updated keys
-    open a new version (valid_from = ts, valid_to NULL). Closed rows
-    and unchanged keys pass through untouched, so repeated applies of
-    the SAME snapshot are a no-op (idempotent refresh).
-
-    Plan: the current slice (valid_to IS NULL) diffs against the new
-    snapshot (one full outer join); closing is one left join of the
-    history against the change keys. History stays append-mostly —
-    exactly the MERGE a lakehouse table service would run."""
-    ts_col = F.lit(ts).cast("timestamp")
-    current = history.where(F.col("valid_to").isNull()).select(
-        *key_cols, *compare_cols
-    )
-    diff = snapshot_diff(current, new, key_cols, compare_cols)
-    closing = diff.where(
-        F.col(CHANGE_COL).isin("update", "delete")
-    ).select(*key_cols, F.lit(True).alias("_close"))
-    closed = (
-        history.join(closing, key_cols, "left")
-        .withColumn(
-            "valid_to",
-            F.when(
-                F.col("_close").isNotNull() & F.col("valid_to").isNull(),
-                ts_col,
-            ).otherwise(F.col("valid_to")),
-        )
-        .drop("_close")
-    )
-    opened = diff.where(
-        F.col(CHANGE_COL).isin("insert", "update")
-    ).select(
-        *key_cols,
-        *compare_cols,
-        ts_col.alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-    )
-    return closed.unionByName(opened)
-
-
-def scd2_as_of(history: DataFrame, ts) -> DataFrame:
-    """Reconstruct the snapshot as of `ts`: rows whose validity
-    interval covers it (valid_from <= ts < valid_to-or-open)."""
-    ts_col = F.lit(ts).cast("timestamp")
-    return history.where(
-        (F.col("valid_from") <= ts_col)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > ts_col))
-    ).drop("valid_from", "valid_to")
 
 
 def recrawl_schedule(

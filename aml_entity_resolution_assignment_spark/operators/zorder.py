@@ -2,17 +2,17 @@
 
 The lakehouse layout optimization (Delta's OPTIMIZE ZORDER BY, the
 classic Morton/Z-curve): interleave the bits of several normalized
-column ranks into one sort key, then range-partition + sort the table
-by it before writing. Files then hold points that are close in EVERY
-clustered dimension, so parquet footer min/max stats prune scans for
-predicates on ANY subset of those columns — the property a single-
-column sort cannot give (sorting by x makes y stats useless).
+column ranks into one sort key (`zorder_value`); a re-clustering
+write range-partitions + sorts the table by it. Files then hold
+points that are close in EVERY clustered dimension, so parquet
+footer min/max stats prune scans for predicates on ANY subset of
+those columns — the property a single-column sort cannot give
+(sorting by x makes y stats useless).
 
 All of it is closed-form integer column arithmetic (shift/mask/or
 over literal bit positions) inside whole-stage codegen — no UDF, no
-window, no extra shuffle beyond the one range-repartition any
-re-clustering write needs. Normalization is an explicit (lo, hi)
-linear rank per column — deterministic and SQL-reproducible (the
+window, no shuffle. Normalization is an explicit (lo, hi) linear
+rank per column — deterministic and SQL-reproducible (the
 zorder oracle row recomputes every z-value), unlike rank-based
 normalizations that need a global sort of their own.
 
@@ -24,7 +24,7 @@ benefit needs no reader support at all.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ZBITS = 16  # bits per dimension
@@ -77,26 +77,4 @@ def zorder_value(
     """z-value column from [(col, lo, hi), ...]."""
     return interleave_bits(
         [zrank(c, lo, hi, bits) for c, lo, hi in df_cols], bits
-    )
-
-
-def zorder_sort(
-    df: DataFrame,
-    cols: list[tuple[str, float, float]],
-    n_files: int = 8,
-    bits: int = ZBITS,
-) -> DataFrame:
-    """Cluster a table along the Z-curve of the given columns: ONE
-    range-repartition on the z-value (sampled bounds — no global
-    sort, no single reducer) + an in-partition sort. Write the result
-    with any sink; parquet min/max footer stats then prune multi-
-    dimensional predicates."""
-    z = zorder_value(
-        [(F.col(name), lo, hi) for name, lo, hi in cols], bits
-    )
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
     )

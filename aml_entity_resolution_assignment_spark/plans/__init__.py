@@ -1,1 +1,1 @@
-from . import pipeline  # noqa: F401
+"""The staged, resumable ER pipeline (`plans.pipeline`)."""

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Sequence
 
 import pandas as pd
@@ -49,12 +49,10 @@ class PipelineConfig:
     # classify.classify_fs; same output schema, no labels/thresholds)
     classifier: str = "cascade"
     resume: bool = True
-    pair_partitions: int | None = None
-    extra: dict = field(default_factory=dict)
 
     def fingerprint(self) -> str:
         """Stable hash of every config field that changes stage OUTPUT
-        (resume/pair_partitions affect only execution). Folded into
+        (`resume` and `work_dir` affect only execution). Folded into
         each stage fingerprint so a rerun with different thresholds,
         caps, or model never silently reuses stale parquet."""
         import hashlib
@@ -75,7 +73,6 @@ class PipelineConfig:
                 if self.thresholds is None
                 else sorted(vars(self.thresholds).items()),
                 "model_path": self.model_path,
-                "extra": sorted(self.extra.items()),
             },
             default=str,
             sort_keys=True,
@@ -268,7 +265,7 @@ def run_pipeline(
         "pair_features",
         fp + "|feats",
         lambda: features.pair_features(
-            pairs.repartition(cfg.pair_partitions or spark.sparkContext.defaultParallelism, "id_a"),
+            pairs.repartition(spark.sparkContext.defaultParallelism, "id_a"),
             keyed,
         ),
     )

@@ -1,1 +1,2 @@
-from . import bz2_dump, generator, io, warc, wat, wiki  # noqa: F401
+"""Readers and writers: the seeded page generator, parquet/Iceberg IO,
+WARC/WAT and the wiki dump. Import each submodule directly."""

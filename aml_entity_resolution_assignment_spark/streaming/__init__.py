@@ -1,1 +1,1 @@
-from . import stream  # noqa: F401
+"""Structured-streaming ER, dedup and resolve jobs (`streaming.stream`)."""

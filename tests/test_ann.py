@@ -125,133 +125,8 @@ def test_rp_band_udf_mixed_dims_deterministic(spark):
 
 
 # ---------------------------------------------------------------------------
-# product quantization (round 4)
+# IVF product quantization (round 4)
 # ---------------------------------------------------------------------------
-
-
-def test_pq_recall_and_compression(spark):
-    """PQ top-k must recover most of the exact top-k (ADC is
-    approximate by design) and the code is m ints vs dim floats."""
-    import numpy as np
-
-    from aml_entity_resolution_assignment_spark.operators.ann import (
-        brute_force_topk,
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = train_pq_codebooks(emb, m=8, k=32, sample=400)
-    assert books.shape == (8, 32, 8)
-    enc = pq_encode(emb, books)
-    row = enc.select("pq_code").first()
-    assert len(row["pq_code"]) == 8
-    assert all(0 <= c < 32 for c in row["pq_code"])
-
-    q = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, q, k=10)
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-
-    approx = pq_topk(enc, q, books, k_neighbors=10)
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    adc_recall = len(a & e) / len(e)
-    # raw ADC on UNCLUSTERED synthetic vectors: modest recall by design
-    assert adc_recall >= 0.25, adc_recall
-
-    # the standard refine step: ADC shortlist -> exact cosine re-rank
-    refined = pq_topk(
-        enc, q, books, k_neighbors=10, rerank=100, vectors=emb
-    )
-    r = {(x["query_id"], x["neighbor_id"]) for x in refined.collect()}
-    refine_recall = len(r & e) / len(e)
-    assert refine_recall >= 0.8, refine_recall
-    assert refine_recall >= adc_recall
-
-
-def test_pq_encoding_partitioning_invariant(spark):
-    from aml_entity_resolution_assignment_spark.operators.ann import (
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = train_pq_codebooks(emb, m=4, k=16, sample=300)
-    one = {
-        r["vec_id"]: tuple(r["pq_code"])
-        for r in pq_encode(emb.repartition(1), books).collect()
-    }
-    many = {
-        r["vec_id"]: tuple(r["pq_code"])
-        for r in pq_encode(emb.repartition(13), books).collect()
-    }
-    assert one == many
-
-
-def test_pq_codebooks_deterministic(spark):
-    import numpy as np
-
-    from aml_entity_resolution_assignment_spark.operators.ann import (
-        train_pq_codebooks,
-    )
-
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    b1 = train_pq_codebooks(emb, m=4, k=8, sample=200)
-    b2 = train_pq_codebooks(emb.repartition(7), m=4, k=8, sample=200)
-    assert np.array_equal(b1, b2)  # id-ordered sample -> same model
-
-
-def test_pq_scan_is_two_level_topk_no_corpus_scale_exchange(spark):
-    """VERDICT r4 item 3: the ADC scan must not shuffle corpus-scale
-    rows into one task per query. The plan must show the mapInPandas
-    local top-k feeding the window exchange (corpus rows never
-    crossJoin with the query set), and a partitioning-invariance probe
-    must return identical rankings at 1 and 13 partitions (the local
-    prune against the (_d, id) total order is exact)."""
-    import os
-
-    from aml_entity_resolution_assignment_spark.operators.ann import (
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = train_pq_codebooks(emb, m=4, k=16, sample=300)
-    q = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    enc = pq_encode(emb, books)
-    out = pq_topk(enc, q, books, k_neighbors=5)
-    jvm = spark._jvm  # noqa: SLF001
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = out._jdf.queryExecution().explainString(mode)  # noqa: SLF001
-    assert "MapInPandas" in plan
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "CrossJoin"):
-        assert bad not in plan, bad
-    one = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in pq_topk(pq_encode(emb.repartition(1), books), q, books,
-                         k_neighbors=5).collect()
-    }
-    many = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in pq_topk(pq_encode(emb.repartition(13), books), q, books,
-                         k_neighbors=5).collect()
-    }
-    assert one == many
 
 
 def test_ivf_pq_full_coverage_matches_exact(spark):
@@ -335,7 +210,7 @@ def test_ivf_pq_bounded_probe_recall_on_clustered_data(spark):
 
 
 def test_ivf_pq_scan_pruned_and_partitioning_invariant(spark):
-    """The ADC scan must keep the pq_topk scale shape: mapInPandas
+    """The ADC scan must keep the two-level top-k scale shape: mapInPandas
     local top-k (no cartesian/query-cross-corpus join) AND a probed-
     cell filter ahead of the scan; results must be identical at 1 and
     13 partitions."""

@@ -104,14 +104,6 @@ def test_band_join_pairs(spark):
     assert got == {("a", "b"), ("a", "e"), ("b", "e")}
 
 
-def test_limit_candidates_per_record(spark):
-    pairs = spark.createDataFrame(
-        [("a", f"b{i:02d}") for i in range(10)], "id_a string, id_b string"
-    )
-    out = C.limit_candidates_per_record(pairs, limit=3)
-    assert out.count() == 3
-
-
 def test_candidate_pairs_union_dedup(spark):
     df = spark.createDataFrame(
         [

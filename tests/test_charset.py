@@ -1,12 +1,10 @@
-"""Charset sniffing + mojibake repair (functions/charset.py)."""
+"""Charset sniffing (functions/charset.py)."""
 
 import codecs
 
 from aml_entity_resolution_assignment_spark.functions.charset import (
     decode_html_col,
     detect_and_decode,
-    fix_mojibake,
-    fix_mojibake_col,
 )
 
 S = "café résumé — naïve €5"
@@ -51,17 +49,6 @@ def test_sniff_and_fallback():
     assert detect_and_decode(b"") == ("", "utf-8")
 
 
-def test_mojibake_repair():
-    broken = S.encode("utf-8").decode("cp1252")
-    assert fix_mojibake(broken) == S
-    # already-correct text untouched (accents alone are no signature)
-    assert fix_mojibake(S) == S
-    assert fix_mojibake("plain ascii") == "plain ascii"
-    assert fix_mojibake(None) is None
-    # double-applied repair is a no-op fixed point here
-    assert fix_mojibake(fix_mojibake(broken)) == S
-
-
 def test_column_forms(spark):
     from pyspark.sql import functions as F
 
@@ -85,15 +72,3 @@ def test_column_forms(spark):
     assert rows["b"][1] == "cp1252" and S in rows["b"][0]
     assert rows["c"] == (S, "utf-16-le")
     assert rows["d"] == (None, None)
-
-    broken = S.encode("utf-8").decode("cp1252")
-    df2 = spark.createDataFrame(
-        [("x", broken), ("y", "plain"), ("z", None)], "id string, t string"
-    )
-    got = {
-        r["id"]: r["f"]
-        for r in df2.select(
-            "id", fix_mojibake_col(F.col("t")).alias("f")
-        ).collect()
-    }
-    assert got == {"x": S, "y": "plain", "z": None}

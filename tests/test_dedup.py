@@ -23,25 +23,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string").cache()
 
 
-def test_exact_duplicate_groups(docs):
-    groups = D.exact_duplicate_groups(docs, "doc_id", "text")
-    got = {(r["canonical_id"], r["id"]) for r in groups.collect()}
-    assert got == {(1, 1), (1, 2), (1, 4)}
-
-
-def test_exact_dedup_keeps_min(docs):
-    kept = {r["doc_id"] for r in D.exact_dedup(docs, "doc_id", "text").collect()}
-    assert kept == {1, 3, 5, 6, 7}
-
-
-def test_exact_dedup_no_normalize(docs):
-    kept = {
-        r["doc_id"]
-        for r in D.exact_dedup(docs, "doc_id", "text", normalize=False).collect()
-    }
-    assert kept == {1, 3, 4, 5, 6, 7}
-
-
 def test_minhash_near_dup_pairs(docs):
     pairs = D.minhash_near_dup_pairs(docs, "doc_id", "text", threshold=0.7)
     got = {(int(r["id_a"]), int(r["id_b"])) for r in pairs.collect()}
@@ -49,13 +30,6 @@ def test_minhash_near_dup_pairs(docs):
     assert (1, 2) in got and (1, 4) in got and (2, 4) in got
     assert (1, 3) in got
     assert all(a not in (5, 6, 7) and b not in (5, 6, 7) for a, b in got)
-
-
-def test_simhash_near_dup_pairs(docs):
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=6)
-    got = {(int(r["id_a"]), int(r["id_b"])) for r in pairs.collect()}
-    assert (1, 2) in got and (1, 4) in got
-    assert all(a not in (5, 6) and b not in (5, 6) for a, b in got)
 
 
 def test_ngram_jaccard_pairs_matches_python_oracle(docs):
@@ -100,6 +74,22 @@ def test_dedup_keep_min_transitive(docs, spark):
     )
     kept = {r["doc_id"] for r in D.dedup_keep_min(docs, pairs, "doc_id").collect()}
     assert kept == {1, 4, 5, 7}
+
+
+def test_dedup_keep_best_keeps_highest_score(docs, spark):
+    pairs = spark.createDataFrame(
+        [("1", "2"), ("2", "3"), ("5", "6")], "id_a string, id_b string"
+    )
+    score = {1: 0.1, 2: 0.5, 3: 0.5, 4: 0.0, 5: 0.9, 6: 0.2, 7: 0.3}
+    scored = docs.join(
+        spark.createDataFrame(list(score.items()), "doc_id long, quality double"),
+        "doc_id",
+    )
+    kept = D.dedup_keep_best(scored, pairs, "doc_id", "quality")
+    assert kept.columns == scored.columns
+    # {1,2,3}: 2 and 3 tie on quality, the min id wins; {5,6}: 5;
+    # singletons 4 and 7 keep themselves
+    assert {r["doc_id"] for r in kept.collect()} == {2, 4, 5, 7}
 
 
 def test_ngram_max_df_drops_stop_shingles(spark):

@@ -175,26 +175,7 @@ def test_fit_params_matches_inline_em(spark):
     assert direct == FS.fs_em(pats, len(FIELDS), iters=10)
 
 
-def test_pseudo_random_pairs_disjoint_and_deterministic(spark):
-    recs = spark.createDataFrame([(f"u{i}",) for i in range(101)], "url string")
-    p1 = sorted(map(tuple, FS.pseudo_random_pairs(recs, "url").collect()))
-    p2 = sorted(
-        map(tuple, FS.pseudo_random_pairs(recs.repartition(7), "url").collect())
-    )
-    assert p1 == p2  # deterministic + partitioning-invariant
-    assert len(p1) == 50  # floor(N/2) pairs
-    used = [x for ab in p1 for x in ab]
-    assert len(used) == len(set(used))  # disjoint
-
-
-def test_estimate_u_and_fix_u_em(spark):
-    flagged = spark.createDataFrame(
-        [(1, 0, 1), (0, 0, 1), (0, 0, 1), (1, 0, 1)], "g1 int, g2 int, g3 int"
-    )
-    u = FS.estimate_u_from_flags(flagged, ["g1", "g2", "g3"])
-    assert u[0] == pytest.approx(0.5)
-    assert u[1] == pytest.approx(1e-6)  # clamped away from 0
-    assert u[2] == pytest.approx(1 - 1e-6)  # clamped away from 1
+def test_fs_em_fix_u_holds_u(spark):
     # fix_u holds u across EM while m/lambda still move
     df = _synth_pairs(spark, n=3000)
     pats = [

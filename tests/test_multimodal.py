@@ -41,19 +41,6 @@ def test_real_decode_is_marked_not_implemented():
         M._decode_image(b"bytes")
 
 
-def test_sample_frames(media):
-    frames = M.sample_frames(media, every_ms=1000).collect()
-    got = sorted((r["media_id"], r["frame_ts_ms"]) for r in frames)
-    assert got == [("m3", 0), ("m3", 1000), ("m3", 2000), ("m3", 3000), ("m3", 4000)]
-
-
-def test_media_stats(media):
-    stats = {r["media_id"]: r for r in M.attach_media_stats(media).collect()}
-    assert stats["m1"]["n_pixels"] == 64 * 48
-    assert stats["m1"]["aspect_ratio"] == pytest.approx(64 / 48)
-    assert stats["m4"]["aspect_ratio"] is None
-
-
 def test_netpbm_decode_roundtrip_and_resize():
     import numpy as np
 

@@ -259,3 +259,56 @@ def test_pipeline_entity_map_is_partitioning_invariant(spark, tmp_path):
         for n in (1, 8)
     ]
     assert hashes[0] == hashes[1] and hashes[0][0] == pages.count()
+
+
+@pytest.fixture(scope="module")
+def keyed_and_pairs(spark):
+    from aml_entity_resolution_assignment_spark.operators.blocking import (
+        add_blocking_keys,
+    )
+    from aml_entity_resolution_assignment_spark.operators.candidates import (
+        candidate_pairs,
+    )
+
+    pages = generate_pages(spark, n_entities=120, seed=7).drop("entity_id").localCheckpoint()
+    keyed = add_blocking_keys(pages).localCheckpoint()
+    pairs = candidate_pairs(keyed).localCheckpoint()
+    return pages, keyed, pairs
+
+
+def test_pair_features_are_partitioning_invariant(keyed_and_pairs):
+    from aml_entity_resolution_assignment_spark.operators.features import (
+        pair_features,
+    )
+
+    _, keyed, pairs = keyed_and_pairs
+    one, eight = (
+        _content_hash(pair_features(pairs.repartition(n), keyed.repartition(n)))
+        for n in (1, 8)
+    )
+    assert one == eight and one[0] == pairs.count() > 0
+
+
+def test_classify_is_partitioning_invariant(keyed_and_pairs):
+    from aml_entity_resolution_assignment_spark.operators.classify import classify
+    from aml_entity_resolution_assignment_spark.operators.features import (
+        pair_features,
+    )
+
+    _, keyed, pairs = keyed_and_pairs
+    feats = pair_features(pairs, keyed).localCheckpoint()
+    one, eight = (_content_hash(classify(feats.repartition(n))) for n in (1, 8))
+    assert one == eight and one[0] == pairs.count()
+
+
+def test_resolve_is_partitioning_invariant(keyed_and_pairs):
+    from aml_entity_resolution_assignment_spark.operators.resolve import resolve
+
+    pages, keyed, _ = keyed_and_pairs
+    queries = pages.orderBy("url").limit(12).localCheckpoint()
+    one, eight = (
+        _content_hash(resolve(queries.repartition(n), keyed.repartition(n)))
+        for n in (1, 8)
+    )
+    # top_n=1: one row per query that has a candidate
+    assert one == eight and 0 < one[0] <= 12

@@ -173,28 +173,6 @@ def test_weighted_sample_matches_reference(spark):
     assert heavy > light
 
 
-def test_temperature_rates(spark):
-    from aml_entity_resolution_assignment_spark.operators.sampling import (
-        temperature_rates,
-    )
-
-    rows = [(i, "big") for i in range(900)] + [
-        (1000 + i, "small") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    r1 = temperature_rates(df, alpha=1.0)  # no re-balancing
-    assert abs(r1["big"] - 1.0) < 1e-12 and abs(r1["small"] - 1.0) < 1e-12
-    r0 = temperature_rates(df, alpha=0.0, target_fraction=0.5)
-    # alpha=0: equal mass per source -> small source up-weighted 9x
-    assert abs(r0["small"] / r0["big"] - 9.0) < 1e-9
-    # expected kept fraction == target
-    total = 900 * r0["big"] + 100 * r0["small"]
-    assert abs(total / 1000 - 0.5) < 1e-12
-    r3 = temperature_rates(df, alpha=0.3)
-    assert r3["small"] > r3["big"]  # partial re-balancing
-    assert temperature_rates(df.limit(0), alpha=0.3) == {}
-
-
 def test_jsonl_roundtrip(spark, tmp_path):
     from aml_entity_resolution_assignment_spark.sources.io import (
         read_jsonl,

@@ -5,7 +5,6 @@ import pytest
 
 from aml_entity_resolution_assignment_spark.operators.search import (
     bm25_scores,
-    build_postings,
 )
 
 DOCS = [
@@ -78,19 +77,6 @@ def test_bm25_absent_term_contributes_nothing(spark):
 def test_bm25_rejects_empty_query(spark):
     with pytest.raises(ValueError):
         bm25_scores(_df(spark), [])
-
-
-def test_build_postings(spark):
-    got = {
-        (r["term"], r["doc_id"]): r["tf"]
-        for r in build_postings(_df(spark)).collect()
-    }
-    assert got[("spark", 1)] == 2
-    assert got[("spark", 4)] == 4
-    assert got[("window", 2)] == 1
-    assert ("", 2) not in got  # double space never becomes a term
-    # postings count == distinct (term, doc) pairs
-    assert len(got) == len({k for k in got})
 
 
 class TestPhraseSearch:

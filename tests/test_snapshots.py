@@ -1,11 +1,8 @@
-"""Snapshot diff + SCD2 history (operators/snapshots.py)."""
+"""Snapshot diff + recrawl schedule (operators/snapshots.py)."""
 
 from pyspark.sql import functions as F
 
 from aml_entity_resolution_assignment_spark.operators.snapshots import (
-    scd2_apply,
-    scd2_as_of,
-    scd2_init,
     snapshot_diff,
 )
 
@@ -53,53 +50,6 @@ def test_snapshot_diff_null_vs_empty_and_shift(spark):
         new = _df(spark, [("u", text, lang)])
         d = snapshot_diff(old, new, ["url"], ["text", "lang"]).collect()
         assert [r["change_type"] for r in d] == ["update"]
-
-
-def test_scd2_lifecycle(spark):
-    t1, t2, t3 = "2024-01-01", "2024-02-01", "2024-03-01"
-    s1 = _df(spark, [("u1", "v1", "en"), ("u2", "w1", "en")])
-    h = scd2_init(s1, ["url"], ["text", "lang"], t1)
-    # t2: u1 updates, u2 deleted, u3 inserted
-    s2 = _df(spark, [("u1", "v2", "en"), ("u3", "x1", "de")])
-    h = scd2_apply(h, s2, ["url"], ["text", "lang"], t2)
-    rows = {
-        (r["url"], str(r["valid_from"])[:10]): (
-            r["text"],
-            str(r["valid_to"])[:10] if r["valid_to"] else None,
-        )
-        for r in h.collect()
-    }
-    assert rows == {
-        ("u1", t1): ("v1", t2),
-        ("u1", t2): ("v2", None),
-        ("u2", t1): ("w1", t2),
-        ("u3", t2): ("x1", None),
-    }
-    # as-of reconstruction
-    asof1 = {
-        r["url"]: r["text"] for r in scd2_as_of(h, "2024-01-15").collect()
-    }
-    assert asof1 == {"u1": "v1", "u2": "w1"}
-    asof2 = {
-        r["url"]: r["text"] for r in scd2_as_of(h, "2024-02-15").collect()
-    }
-    assert asof2 == {"u1": "v2", "u3": "x1"}
-    # idempotent refresh: applying the same snapshot again changes nothing
-    h2 = scd2_apply(h, s2, ["url"], ["text", "lang"], t3)
-    assert sorted(map(tuple, h2.collect())) == sorted(map(tuple, h.collect()))
-
-
-def test_scd2_reinsert_after_delete(spark):
-    t1, t2, t3 = "2024-01-01", "2024-02-01", "2024-03-01"
-    h = scd2_init(_df(spark, [("u", "a", "en")]), ["url"], ["text", "lang"], t1)
-    h = scd2_apply(h, _df(spark, []), ["url"], ["text", "lang"], t2)
-    h = scd2_apply(h, _df(spark, [("u", "b", "en")]), ["url"], ["text", "lang"], t3)
-    rows = sorted(
-        (str(r["valid_from"])[:10], r["text"],
-         str(r["valid_to"])[:10] if r["valid_to"] else None)
-        for r in h.collect()
-    )
-    assert rows == [(t1, "a", t2), (t3, "b", None)]
 
 
 class TestRecrawlSchedule:

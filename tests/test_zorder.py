@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from aml_entity_resolution_assignment_spark.operators.zorder import (
     interleave_bits,
-    zorder_sort,
     zorder_value,
     zrank,
 )
@@ -70,53 +69,6 @@ def test_zrank_clamps_and_nulls(spark):
     assert got[6] == 0  # NULL clusters at the origin
     with pytest.raises(ValueError, match="hi > lo"):
         zrank(F.col("v"), 5.0, 5.0)
-
-
-def test_zorder_files_prune_cross_dimension_predicates(spark):
-    """The property Z-ordering exists for: a predicate on the OTHER
-    dimension intersects far fewer file bounding boxes than under a
-    single-column sort (where every file spans the full y range)."""
-    rng = random.Random(42)
-    n_files = 16
-    rows = [(rng.random(), rng.random()) for _ in range(20_000)]
-    df = spark.createDataFrame(rows, "x double, y double")
-
-    def file_boxes(clustered):
-        return (
-            clustered.withColumn("_f", F.spark_partition_id())
-            .groupBy("_f")
-            .agg(
-                F.min("x").alias("x0"), F.max("x").alias("x1"),
-                F.min("y").alias("y0"), F.max("y").alias("y1"),
-            )
-            .collect()
-        )
-
-    zboxes = file_boxes(
-        zorder_sort(df, [("x", 0.0, 1.0), ("y", 0.0, 1.0)], n_files=n_files)
-    )
-    xboxes = file_boxes(
-        df.repartitionByRange(n_files, "x").sortWithinPartitions("x")
-    )
-    assert len(zboxes) == n_files and len(xboxes) == n_files
-
-    def hits(boxes, y_lo, y_hi):  # files a y-band scan must read
-        return sum(1 for b in boxes if b["y1"] >= y_lo and b["y0"] <= y_hi)
-
-    bands = [(0.10, 0.15), (0.40, 0.45), (0.80, 0.85)]
-    z_total = sum(hits(zboxes, *b) for b in bands)
-    x_total = sum(hits(xboxes, *b) for b in bands)
-    # x-sorted files all span y=[0,1]: every band hits every file
-    assert x_total == n_files * len(bands)
-    # z-ordered files are y-localized: at least half the scan prunes
-    assert z_total <= x_total // 2, (z_total, x_total)
-    # no rows lost by the re-clustering
-    assert (
-        zorder_sort(
-            df, [("x", 0.0, 1.0), ("y", 0.0, 1.0)], n_files=n_files
-        ).count()
-        == 20_000
-    )
 
 
 def test_zorder_value_deterministic_across_partitioning(spark):

@@ -177,8 +177,8 @@ SECTIONS = [
         "zorder_events",
         "Morton clustering key: all 32 interleave terms are literal "
         "shift/mask ORs inside ONE WholeStageCodegen projection over "
-        "the scan — no UDF, no window, no exchange (zorder_sort adds "
-        "exactly one sampled-bounds RangePartitioning exchange).",
+        "the scan — no UDF, no window, no exchange (a re-clustering write "
+        "adds exactly one sampled-bounds RangePartitioning exchange).",
     ),
     (
         "trigram_lm",
